@@ -117,6 +117,16 @@ final case class BoolOp(op: String, values: Seq[Expr]) extends Expr
   */
 final case class WhenChain(cases: Seq[(Expr, Expr)], orelse: Expr) extends Expr
 
+/** Internal: values the SSA lowering behind `Program.column`
+  * ([[Compiler.lower]]) computes once per row, independently of each
+  * other, before `body`, which reads them as [[LetRef]]s. Never part of
+  * `Program.expr`, the reference tree.
+  */
+final case class Let(bindings: Seq[(Int, Expr)], body: Expr) extends Expr
+
+/** Internal: a read of the value bound as `id` by an enclosing [[Let]]. */
+final case class LetRef(id: Int) extends Expr
+
 // ---------------------------------------------------------------------------
 // Statements
 // ---------------------------------------------------------------------------

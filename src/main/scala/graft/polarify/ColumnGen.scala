@@ -1,9 +1,10 @@
 package graft.polarify
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.PolarifyLet
 import org.apache.spark.sql.{functions => F}
 
-/** Resolved, fully inlined [[Expr]] tree → Spark [[Column]].
+/** Compiled [[Expr]] tree → Spark [[Column]].
   *
   * The emitted tree is pure `functions.when(...).when(...).otherwise(...)`
   * + Column operators — Catalyst `CaseWhen` et al., all whole-stage
@@ -14,11 +15,18 @@ import org.apache.spark.sql.{functions => F}
   * Free [[Ref]]s resolve through `params` (the analogue of applying the
   * polarified function to `pl.col("x")` or any other expression, ref
   * README.md:117), falling back to `col(name)`.
+  *
+  * `Program.column` lowers the SSA form ([[Compiler.lower]]): each [[Let]]
+  * becomes one [[PolarifyLet]], whose values are computed once per row
+  * where it stands and read by name in its body. So `k` sequential blocks
+  * give an expression of size O(k) in one whole-stage codegen stage.
   */
 object ColumnGen {
   import BinOperator._
   import UnaryOperator._
   import CmpOperator._
+
+  private def letName(id: Int): String = s"pf_let_$id"
 
   def toColumn(expr: Expr, params: Map[String, Column] = Map.empty): Column = {
     def go(e: Expr): Column = e match {
@@ -70,6 +78,9 @@ object ColumnGen {
           acc.when(go(t), go(v))
         }.otherwise(go(orelse))
       case IfExp(t, b, o) => F.when(go(t), go(b)).otherwise(go(o))
+      case Let(bindings, body) =>
+        PolarifyLet.let(bindings.map { case (id, v) => letName(id) -> go(v) }, go(body))
+      case LetRef(id)     => PolarifyLet.ref(letName(id))
       case other =>
         throw new IllegalArgumentException(
           s"Unsupported expression type: ${other.getClass.getSimpleName}")

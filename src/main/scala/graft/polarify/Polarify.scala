@@ -22,14 +22,22 @@ import org.apache.spark.sql.Column
   * }}}
   */
 final case class Program(stmts: Seq[Stmt]) {
-  /** Resolved, fully inlined conditional-expression tree. */
+  /** Resolved, fully inlined conditional-expression tree: the
+    * reference's output, which `explain`, `sql` and the Python-source
+    * surface render. Its size can grow exponentially with the program.
+    */
   lazy val expr: Expr = Compiler.compileToExpr(stmts)
 
+  /** The SSA lowering `column` compiles: linear in the program's size. */
+  private lazy val lowered: Expr = Compiler.lower(stmts)
+
   /** Compile to a Spark Column; free names bind via `params`, else to
-    * `col(name)`.
+    * `col(name)`. Computes the same value as `expr` on every row, but a
+    * value read more than once is computed once per row (see
+    * [[Compiler.lower]]).
     */
   def column(params: Map[String, Column] = Map.empty): Column =
-    ColumnGen.toColumn(expr, params)
+    ColumnGen.toColumn(lowered, params)
 
   /** Compile to DuckDB-runnable SQL text (the oracle surface); free names
     * bind via `params` as SQL fragments.

@@ -38,6 +38,8 @@ object Render {
     case BoolOp(op, values) => values.map(toText).mkString(s" $op ")
     case TupleExpr(es)      => es.map(toText).mkString("(", ", ", ")")
     case ListExpr(es)       => es.map(toText).mkString("[", ", ", "]")
+    case _: Let | _: LetRef =>
+      throw new IllegalArgumentException("the SSA lowering's lets have no source form")
   }
 
   // -------------------------------------------------------------------
@@ -71,7 +73,7 @@ object Render {
 
   private def prec(e: Expr): Int = e match {
     case _: WhenChain | _: CallFn | _: Ref | _: ListExpr |
-         _: TupleExpr => ATOM
+         _: TupleExpr | _: LetRef | _: Let => ATOM
     case _: IfExp        => ATOM // rendered as a pl.when call chain
     case Lit(_)          => ATOM
     case BinOp(op, _, _) => binPrec(op)
@@ -134,6 +136,7 @@ object Render {
         if (es.size == 1) s"(${py(es.head, 0)},)"
         else es.map(py(_, 0)).mkString("(", ", ", ")")
       case ListExpr(es) => es.map(py(_, 0)).mkString("[", ", ", "]")
+      case l @ (_: Let | _: LetRef) => toText(l)
     }
     if (prec(e) < required) s"($s)" else s
   }

@@ -38,6 +38,10 @@ case class MinHashMins(child: Expression, a: Array[Long], b: Array[Long],
   require(a.length == b.length && a.nonEmpty,
     s"coefficient arrays must be equal-length and non-empty " +
       s"(got ${a.length}/${b.length})")
+  // the no-overflow domain: a*(h%p)+b < p^2 <= 2^62
+  require(p > 0 && p <= (1L << 31) &&
+    a.forall(v => v >= 0 && v < p) && b.forall(v => v >= 0 && v < p),
+    s"coefficients must lie in [0, p) with 0 < p <= 2^31 (p = $p)")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
   override def dataType: DataType =

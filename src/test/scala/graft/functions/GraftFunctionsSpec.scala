@@ -99,4 +99,48 @@ class GraftFunctionsSpec extends AnyFunSuite {
     assert(plan.contains("CASE WHEN"))
     assert(!plan.toLowerCase.contains("udf"))
   }
+
+  test("a registered let-lowered program runs from spark.sql") {
+    // four sequential blocks, each reading the previous block's result
+    // three times: the lowering shares each block's value as a let
+    val blocks4 = Program.fromPython(
+      """def blocks4(x):
+        |    y = x
+        |    if y < 3:
+        |        y = y + 2
+        |    else:
+        |        y = y * 2 - 1
+        |    if y >= -4:
+        |        y = y - 5
+        |    else:
+        |        y = y * 2 + 3
+        |    if y < 0:
+        |        y = y + 7
+        |    else:
+        |        y = y * 2 - 4
+        |    if y != 6:
+        |        y = y * 3
+        |    else:
+        |        y = y - 1
+        |    return y
+        |""".stripMargin)
+    assert(graft.polarify.Compiler.letCount(graft.polarify.Compiler.lower(blocks4.stmts)) == 3)
+    GraftFunctions.registerProgram(spark, "blocks4_pf", Seq("x"), blocks4)
+    (-20L to 20L).toDF("v").createOrReplaceTempView("blocks_in")
+    val got = spark.sql("SELECT v, CAST(blocks4_pf(v) AS BIGINT) FROM blocks_in")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def want(x: Long): Long = {
+      var y = x
+      y = if (y < 3) y + 2 else y * 2 - 1
+      y = if (y >= -4) y - 5 else y * 2 + 3
+      y = if (y < 0) y + 7 else y * 2 - 4
+      if (y != 6) y * 3 else y - 1
+    }
+    (-20L to 20L).foreach(x => assert(got(x) === want(x), s"x=$x"))
+
+    // its select-list copy matches its GROUP BY copy
+    val grouped = spark.sql("SELECT blocks4_pf(v), count(*) FROM blocks_in GROUP BY blocks4_pf(v)")
+      .collect().map(r => r.get(0).asInstanceOf[Number].longValue -> r.getLong(1)).toMap
+    assert(grouped === (-20L to 20L).groupBy(want).map { case (k, vs) => k -> vs.size.toLong })
+  }
 }

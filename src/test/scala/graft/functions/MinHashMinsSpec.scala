@@ -61,4 +61,14 @@ class MinHashMinsSpec extends AnyFunSuite {
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1)) // NULL: both NULL
     assert(!rows(2).isNullAt(0))
   }
+
+  test("coefficients outside the no-overflow domain are rejected") {
+    def build(a: Long, b: Long, p: Long) =
+      GraftFunctions.minHashMins(col("ha"), Array(a), Array(b), p)
+    build(1L, 0L, 1L << 31) // the widest domain: a*(h%p)+b < 2^62
+    Seq((1L, 0L, (1L << 31) + 1), (1L, 0L, 0L), (P, 0L, P), (1L, -1L, P), (-1L, 0L, P))
+      .foreach { case (a, b, p) =>
+        intercept[IllegalArgumentException](build(a, b, p))
+      }
+  }
 }

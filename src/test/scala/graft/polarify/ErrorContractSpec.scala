@@ -7,16 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * tests/test_error_handling.py:8-12, corpus pairs at
   * tests/functions.py:321-329 and tests/functions_310.py:316-322).
   * Each unsupported construct must fail at compile time with a message
-  * containing the reference's match string.
+  * containing the reference's match string, through `expr` and `column`
+  * alike.
   */
 class ErrorContractSpec extends AnyFunSuite {
 
   private val x = "x".ref
 
+  /** Both compilers must reject the program with the same message: the
+    * reference behind `expr` and the SSA lowering behind `column`.
+    */
   private def expectError(program: Program, substring: String): Unit = {
-    val e = intercept[IllegalArgumentException](program.expr)
-    assert(e.getMessage.contains(substring),
-      s"expected '${substring}' in '${e.getMessage}'")
+    val viaExpr = intercept[IllegalArgumentException](Program(program.stmts).expr)
+    val viaColumn = intercept[IllegalArgumentException](Program(program.stmts).column())
+    assert(viaExpr.getMessage.contains(substring),
+      s"expected '${substring}' in '${viaExpr.getMessage}'")
+    assert(viaColumn.getMessage === viaExpr.getMessage)
   }
 
   test("chained_compare_expr → Polars can't handle chained comparisons") {

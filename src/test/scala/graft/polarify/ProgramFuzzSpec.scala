@@ -246,6 +246,80 @@ class ProgramFuzzSpec extends AnyFunSuite {
     }
   }
 
+  // ---------------- let-path programs (the SSA lowering) ----------------
+
+  /** Programs whose values the SSA lowering behind `.column` shares:
+    * up to 12 segments of sequential if/else blocks over `y` (and
+    * sometimes `z`) whose result the next segment reads again, one-armed
+    * updates, partial returns followed by more assignments, and at most
+    * three straight-line `y = y + y`. Arms read `y` once, so the reference
+    * tree, which the SQL path renders, stays small enough to plan.
+    */
+  private val letProgramGen: Gen[Program] = {
+    import BinOperator._
+    val (x, y, z) = (Ref("x"), Ref("y"), Ref("z"))
+    val k = Gen.chooseNum(-5, 5).map(i => Lit(i))
+    val test = for {
+      l  <- Gen.oneOf(x, y, y, z)
+      op <- Gen.oneOf(CmpOperator.Lt, CmpOperator.GtE, CmpOperator.NotEq)
+      r  <- k
+    } yield Compare(l, Seq(op), Seq(r))
+    val update: Gen[Stmt] = Gen.oneOf(
+      k.map(c => Assign("y", BinOp(Add, y, c))),
+      k.map(c => Assign("y", BinOp(Sub, BinOp(Mult, y, Lit(2)), c))),
+      k.map(c => Assign("y", BinOp(Sub, y, BinOp(Mult, z, c)))),
+      k.map(c => Assign("z", BinOp(Add, z, c))))
+    val segment: Gen[Seq[Stmt]] = Gen.frequency(
+      6 -> (for { t <- test; a <- Gen.listOfN(2, update); b <- update } yield Seq(If(t, a, Seq(b)))),
+      2 -> (for { t <- test; a <- update } yield Seq(If(t, Seq(a)))),
+      2 -> (for { t <- test; c <- k } yield Seq(If(t, Seq(Return(BinOp(Add, BinOp(Add, y, z), c)))))),
+      1 -> Gen.const(Seq(Assign("y", BinOp(Add, y, y)))))
+    for {
+      n    <- Gen.frequency(4 -> Gen.choose(1, 6), 2 -> Gen.choose(7, 9), 1 -> Gen.choose(10, 12))
+      segs <- Gen.listOfN(n, segment)
+      c    <- k
+    } yield {
+      // at most three doublings: each doubles the reference tree
+      var doublings = 0
+      val body = segs.flatMap {
+        case s @ Seq(Assign(_, BinOp(Add, `y`, `y`))) =>
+          doublings += 1
+          if (doublings <= 3) s else Seq(Assign("y", BinOp(Add, y, Lit(1))))
+        case s => s
+      }
+      Program(Seq(Assign("y", x), Assign("z", BinOp(Sub, x, c))) ++ body :+
+        Return(BinOp(Sub, BinOp(Add, y, y), z)))
+    }
+  }
+
+  test("random LET-PATH programs: compiled Column and SQL match the interpreter") {
+    import spark.implicits._
+    val df = xs.toDF("x").cache()
+    var seed = Seed(8128L)
+    var shared = 0
+    (1 to 60).foreach { i =>
+      val p = letProgramGen.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      if (Compiler.letCount(Compiler.lower(p.stmts)) > 0) shared += 1
+      val expected = xs.map(x => run(p.stmts, Map("x" -> x)).toOption.get)
+
+      val viaColumn = df
+        .select(col("x"), p.column(Map("x" -> col("x"))).cast("long").as("r"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val viaSql = df
+        .selectExpr("x", s"CAST((${p.sql(Map("x" -> "x"))}) AS BIGINT) AS r")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+      xs.zip(expected).foreach { case (x, want) =>
+        assert(viaColumn(x) == want,
+          s"[let program $i] Column diverged at x=$x: got ${viaColumn(x)}, want $want\n${p.stmts}")
+        assert(viaSql(x) == want,
+          s"[let program $i] SQL diverged at x=$x: got ${viaSql(x)}, want $want\n${p.stmts}")
+      }
+    }
+    assert(shared >= 30, s"only $shared of 60 programs kept a let")
+  }
+
   // ---------------- python-source rendering (for the parser path) ----------------
 
   private def pyExpr(e: Expr): String = e match {

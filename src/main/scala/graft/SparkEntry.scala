@@ -5,12 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.polarify.Corpus
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The gate registry and the driver's entry points.
   *
-  * Parity queries: one per reference corpus function (SURVEY.md §2c).
-  * Each binds the compiled when-chain to `x := CAST(l_quantity AS BIGINT)
-  * - 25` over `lineitem` (values straddle every branch boundary of the
-  * corpus, matching the reference fixture's [-100,100] spirit,
+  * Every gate is a [[Gate]]: a Spark query plus the DuckDB oracle SQL
+  * that must return the same rows. `queries` and `oracleSql` are the two
+  * views of the one registry that Verify, Bench and the benchmark read,
+  * so their key sets are equal by construction.
+  *
+  * Parity gates (`pf_`): one per reference corpus function (SURVEY.md
+  * §2c). Each binds the compiled when-chain to `x := CAST(l_quantity AS
+  * BIGINT) - 25` over `lineitem` (values straddle every branch boundary
+  * of the corpus, matching the reference fixture's [-100,100] spirit,
   * ref tests/test_parse_body.py:38-43) and dumps the complete extensional
   * mapping `SELECT DISTINCT x, result ORDER BY x` — deterministic, tiny,
   * and a full conformance check of the compiled expression.
@@ -47,22 +52,26 @@ object SparkEntry {
       s"FROM lineitem ORDER BY x"
   }
 
-  private val parity: Map[String, (SparkSession, String) => DataFrame] =
-    Corpus.all.map(c => s"pf_${c.name}" -> parityQuery(c)).toMap
-  private val parityOracles: Map[String, String] =
-    Corpus.all.map(c => s"pf_${c.name}" -> parityOracle(c)).toMap
+  private val parity: Map[String, Gate] = Gate.registry(Corpus.all.map(c =>
+    Gate(s"pf_${c.name}", parityQuery(c), parityOracle(c))))
+
+  /** Every gate, keyed by name: the 54 parity gates and the extension
+    * gates of [[graft.ops.Extensions]].
+    */
+  private lazy val gates: Map[String, Gate] =
+    Gate.registry(parity.values.toSeq ++ ops.Extensions.gates)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     parity("pf_signum")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Each gate's Spark query, by gate name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    parity ++ ops.Extensions.queries
+    gates.map { case (name, g) => name -> g.query }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** Each gate's DuckDB oracle SQL, by gate name, over the same parquet
+    * tables as its query. Read afresh on every call (see [[Gate]]).
     */
   def oracleSql: Map[String, String] =
-    parityOracles ++ ops.Extensions.oracleSql
+    gates.map { case (name, g) => name -> g.oracle }
 }

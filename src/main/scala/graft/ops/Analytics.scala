@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Relational analytics surface over the driver's TPC-H-ish tables —
   * the category sweep of SURVEY.md §2b (joins, aggregations, grouping
@@ -178,7 +179,7 @@ object Analytics {
         col("cnt"), col("sum_qty"))
       .orderBy("flag", "status")
 
-  private val rollupLineitemSql =
+  private[ops] val rollupLineitemSql =
     """SELECT coalesce(l_returnflag,'ALL') AS flag,
       |  coalesce(l_linestatus,'ALL') AS status,
       |  COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
@@ -250,7 +251,7 @@ object Analytics {
         sum(cents(col("value"))).as("sum_value_cents"))
       .orderBy("hour", "event_type")
 
-  private val eventsHourlySql =
+  private[ops] val eventsHourlySql =
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
       |  event_type, COUNT(*) AS cnt,
       |  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents
@@ -457,7 +458,7 @@ object Analytics {
   // tiebreak so every function is deterministic; cume_dist (a ratio of
   // two integers) is floored to micro-units for bit-stable comparison.
   // -------------------------------------------------------------------
-  private def windowSuite(spark: SparkSession, dir: String): DataFrame = {
+  private[ops] def windowSuite(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     t(spark, dir, "orders")
       .withColumn("seq", row_number().over(w))
@@ -471,7 +472,7 @@ object Analytics {
       .orderBy("o_orderkey")
   }
 
-  private val windowSuiteSql =
+  private[ops] val windowSuiteSql =
     """SELECT o_orderkey, o_custkey,
       |  CAST(row_number() OVER w AS BIGINT) AS seq,
       |  CAST(datediff('day', lag(o_orderdate, 1) OVER w, o_orderdate) AS BIGINT) AS gap_days,
@@ -565,7 +566,7 @@ object Analytics {
   // broadcast threshold, AQE falls back to a shuffled hash join on
   // o_orderkey — still one keyed exchange of the fact side.
   // -------------------------------------------------------------------
-  private def shipPriority(spark: SparkSession, dir: String): DataFrame = {
+  private[ops] def shipPriority(spark: SparkSession, dir: String): DataFrame = {
     val cust = spark.read.parquet(s"$dir/customer.parquet")
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
@@ -584,7 +585,7 @@ object Analytics {
       .limit(10)
   }
 
-  private val shipPrioritySql =
+  private[ops] val shipPrioritySql =
     """SELECT l.l_orderkey AS o_orderkey,
       |  strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
       |  CAST(SUM(CAST(round(l.l_extendedprice*(1.0-l.l_discount)*100) AS BIGINT))
@@ -623,7 +624,7 @@ object Analytics {
       .orderBy("o_custkey", "o_orderkey")
   }
 
-  private val trailingRevenueSql =
+  private[ops] val trailingRevenueSql =
     """SELECT o_custkey, o_orderkey,
       |  CAST(date_diff('day', DATE '1970-01-01', o_orderdate) AS BIGINT)
       |    AS epoch_day,
@@ -1178,75 +1179,39 @@ object Analytics {
        |FROM cf JOIN c USING (event_type), g
        |ORDER BY event_type, fold""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_target_oof"        -> (targetOof _),
-    "ax_order_count_dist"  -> (orderCountDist _),
-    "ax_join_explosion"    -> (joinExplosion _),
-    "ax_small_quantity"    -> (smallQuantity _),
-    "ax_idle_customers"    -> (idleCustomers _),
-    "ax_late_suppliers"    -> (lateSuppliers _),
-    "ax_nullsafe_join"     -> (nullsafeJoin _),
-    "ax_revenue_share"     -> (revenueShare _),
-    "ax_excess_shippers"   -> (excessShippers _),
-    "ax_nation_volume"     -> (nationVolume _),
-    "ax_trailing_revenue"  -> (trailingRevenue _),
-    "ax_ship_priority"     -> (shipPriority _),
-    "ax_window_suite"      -> (windowSuite _),
-    "ax_fuzzy_name"        -> (fuzzyName _),
-    "ax_er_blocked"        -> (erBlocked _),
-    "ax_percentiles"       -> (percentiles _),
-    "ax_approx_quantiles"  -> (approxQuantiles _),
-    "ax_salted_join"       -> (saltedJoin _),
-    "ax_skew_profile"      -> (skewProfile _),
-    "ax_pricing_summary"   -> (pricingSummary _),
-    "ax_revenue_by_segment" -> (revenueBySegment _),
-    "ax_cust_no_orders"    -> (custNoOrders _),
-    "ax_cust_semi_nation"  -> (custSemiNation _),
-    "ax_topk_per_segment"  -> (topkPerSegment _),
-    "ax_topn_rewrite"      -> (topnRewrite _),
-    "ax_top100_orders"     -> (top100Orders _),
-    "ax_rollup_lineitem"   -> (rollupLineitem _),
-    "ax_cube_lineitem"     -> (cubeLineitem _),
-    "ax_pivot_lineitem"    -> (pivotLineitem _),
-    "ax_buyers_intersect"  -> (buyersIntersect _),
-    "ax_events_hourly"     -> (eventsHourly _),
-    "ax_sessionize"        -> (sessionize _),
-    "ax_distinct_users"    -> (distinctUsers _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_target_oof"        -> targetOofSql,
-    "ax_order_count_dist"  -> orderCountDistSql,
-    "ax_join_explosion"    -> joinExplosionSql,
-    "ax_small_quantity"    -> smallQuantitySql,
-    "ax_idle_customers"    -> idleCustomersSql,
-    "ax_late_suppliers"    -> lateSuppliersSql,
-    "ax_nullsafe_join"     -> nullsafeJoinSql,
-    "ax_revenue_share"     -> revenueShareSql,
-    "ax_excess_shippers"   -> excessShippersSql,
-    "ax_nation_volume"     -> nationVolumeSql,
-    "ax_trailing_revenue"  -> trailingRevenueSql,
-    "ax_ship_priority"     -> shipPrioritySql,
-    "ax_window_suite"      -> windowSuiteSql,
-    "ax_fuzzy_name"        -> fuzzyNameSql,
-    "ax_er_blocked"        -> erBlockedSql,
-    "ax_percentiles"       -> percentilesSql,
-    "ax_approx_quantiles"  -> approxQuantilesSql,
-    "ax_salted_join"       -> saltedJoinSql,
-    "ax_skew_profile"      -> skewProfileSql,
-    "ax_pricing_summary"   -> pricingSummarySql,
-    "ax_revenue_by_segment" -> revenueBySegmentSql,
-    "ax_cust_no_orders"    -> custNoOrdersSql,
-    "ax_cust_semi_nation"  -> custSemiNationSql,
-    "ax_topk_per_segment"  -> topkPerSegmentSql,
-    "ax_topn_rewrite"      -> topkPerSegmentSql,
-    "ax_top100_orders"     -> top100OrdersSql,
-    "ax_rollup_lineitem"   -> rollupLineitemSql,
-    "ax_cube_lineitem"     -> cubeLineitemSql,
-    "ax_pivot_lineitem"    -> pivotLineitemSql,
-    "ax_buyers_intersect"  -> buyersIntersectSql,
-    "ax_events_hourly"     -> eventsHourlySql,
-    "ax_sessionize"        -> sessionizeSql,
-    "ax_distinct_users"    -> distinctUsersSql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_target_oof", targetOof, targetOofSql),
+    Gate("ax_order_count_dist", orderCountDist, orderCountDistSql),
+    Gate("ax_join_explosion", joinExplosion, joinExplosionSql),
+    Gate("ax_small_quantity", smallQuantity, smallQuantitySql),
+    Gate("ax_idle_customers", idleCustomers, idleCustomersSql),
+    Gate("ax_late_suppliers", lateSuppliers, lateSuppliersSql),
+    Gate("ax_nullsafe_join", nullsafeJoin, nullsafeJoinSql),
+    Gate("ax_revenue_share", revenueShare, revenueShareSql),
+    Gate("ax_excess_shippers", excessShippers, excessShippersSql),
+    Gate("ax_nation_volume", nationVolume, nationVolumeSql),
+    Gate("ax_trailing_revenue", trailingRevenue, trailingRevenueSql),
+    Gate("ax_ship_priority", shipPriority, shipPrioritySql),
+    Gate("ax_window_suite", windowSuite, windowSuiteSql),
+    Gate("ax_fuzzy_name", fuzzyName, fuzzyNameSql),
+    Gate("ax_er_blocked", erBlocked, erBlockedSql),
+    Gate("ax_percentiles", percentiles, percentilesSql),
+    Gate("ax_approx_quantiles", approxQuantiles, approxQuantilesSql),
+    Gate("ax_salted_join", saltedJoin, saltedJoinSql),
+    Gate("ax_skew_profile", skewProfile, skewProfileSql),
+    Gate("ax_pricing_summary", pricingSummary, pricingSummarySql),
+    Gate("ax_revenue_by_segment", revenueBySegment, revenueBySegmentSql),
+    Gate("ax_cust_no_orders", custNoOrders, custNoOrdersSql),
+    Gate("ax_cust_semi_nation", custSemiNation, custSemiNationSql),
+    Gate("ax_topk_per_segment", topkPerSegment, topkPerSegmentSql),
+    Gate("ax_topn_rewrite", topnRewrite, topkPerSegmentSql),
+    Gate("ax_top100_orders", top100Orders, top100OrdersSql),
+    Gate("ax_rollup_lineitem", rollupLineitem, rollupLineitemSql),
+    Gate("ax_cube_lineitem", cubeLineitem, cubeLineitemSql),
+    Gate("ax_pivot_lineitem", pivotLineitem, pivotLineitemSql),
+    Gate("ax_buyers_intersect", buyersIntersect, buyersIntersectSql),
+    Gate("ax_events_hourly", eventsHourly, eventsHourlySql),
+    Gate("ax_sessionize", sessionize, sessionizeSql),
+    Gate("ax_distinct_users", distinctUsers, distinctUsersSql)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Backward as-of join — an operator Spark lacks natively (SURVEY.md
   * marks it an extension; DuckDB spells it `ASOF JOIN`, which is exactly
@@ -80,9 +81,7 @@ object AsOf {
       |  ON p.user_id = v.user_id AND p.ts >= v.ts
       |ORDER BY p.event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_asof_view_purchase" -> (asofViewPurchase _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_asof_view_purchase" -> asofViewPurchaseSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_asof_view_purchase", asofViewPurchase, asofViewPurchaseSql)
+  )
 }

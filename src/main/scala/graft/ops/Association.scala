@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Market-basket and graph-structure analytics over the shared
   * co-purchase substrate ([[Graph.pairCounts]]): association rules
@@ -292,13 +293,9 @@ object Association {
       |  CAST(CAST(n_dir AS HUGEINT) * sxx - sx * sx AS VARCHAR) AS r_den
       |FROM a""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_lift_rules"     -> (liftRules _),
-    "ax_modularity"     -> (modularity _),
-    "ax_assortativity"  -> (assortativity _))
-
-  def oracleSql: Map[String, String] = Map(
-    "ax_lift_rules"     -> liftRulesSql,
-    "ax_modularity"     -> modularitySql,
-    "ax_assortativity"  -> assortativitySql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_lift_rules", liftRules, liftRulesSql),
+    Gate("ax_modularity", modularity, modularitySql),
+    Gate("ax_assortativity", assortativity, assortativitySql)
+  )
 }

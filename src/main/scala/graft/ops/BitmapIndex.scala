@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Bitmap-index set algebra over the event stream: per-segment user
   * sets packed 64 users per int64 word (the roaring/bitmap-index
@@ -135,11 +136,8 @@ object BitmapIndex {
       |  CAST(n_words * 1000 // span_words AS BIGINT) AS occupancy_permille
       |FROM s ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_bitmap_intersect" -> (bitmapIntersect _),
-    "ax_bitmap_density"   -> (bitmapDensity _))
-
-  def oracleSql: Map[String, String] = Map(
-    "ax_bitmap_intersect" -> bitmapIntersectSql,
-    "ax_bitmap_density"   -> bitmapDensitySql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_bitmap_intersect", bitmapIntersect, bitmapIntersectSql),
+    Gate("ax_bitmap_density", bitmapDensity, bitmapDensitySql)
+  )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Bucketed physical layout → co-located (zero-exchange) joins.
   *
@@ -93,9 +94,7 @@ object Bucketing {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_bucketed_join" -> (bucketedJoin _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_bucketed_join" -> bucketedJoinSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_bucketed_join", bucketedJoin, bucketedJoinSql)
+  )
 }

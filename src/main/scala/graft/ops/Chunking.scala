@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** LLM training-data preparation: context-window chunking and
   * token-budget packing — the two reshape steps between "clean
@@ -394,19 +395,12 @@ object Chunking {
        |ORDER BY p.doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_cdc_chunks"      -> (cdcChunks _),
-    "tx_chunk_stats"     -> (chunkStats _),
-    "tx_pack_bins"       -> (packBins _),
-    "tx_pack_attention"  -> (packAttention _),
-    "tx_para_dedup"      -> (paraDedup _),
-    "tx_boilerplate_rm"  -> (boilerplateRm _))
-
-  val oracleSql: Map[String, String] = Map(
-    "dd_cdc_chunks"      -> cdcChunksSql,
-    "tx_chunk_stats"     -> chunkStatsSql,
-    "tx_pack_bins"       -> packBinsSql,
-    "tx_pack_attention"  -> packAttentionSql,
-    "tx_para_dedup"      -> paraDedupSql,
-    "tx_boilerplate_rm"  -> boilerplateRmSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("dd_cdc_chunks", cdcChunks, cdcChunksSql),
+    Gate("tx_chunk_stats", chunkStats, chunkStatsSql),
+    Gate("tx_pack_bins", packBins, packBinsSql),
+    Gate("tx_pack_attention", packAttention, packAttentionSql),
+    Gate("tx_para_dedup", paraDedup, paraDedupSql),
+    Gate("tx_boilerplate_rm", boilerplateRm, boilerplateRmSql)
+  )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** User-lifecycle analytics over the event log: funnel staging, cohort
   * retention, and gap-filled resampling — the three standard shapes of
@@ -670,31 +671,18 @@ object Cohorts {
       |    AS BIGINT) AS lift_ppm
       |FROM d, n GROUP BY decile ORDER BY decile""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_decile_lift"      -> (decileLift _),
-    "ax_activity_streaks" -> (activityStreaks _),
-    "ax_budget_pacing"    -> (budgetPacing _),
-    "ax_cohort_ltv"        -> (cohortLtv _),
-    "ax_attribution_linear" -> (attributionLinear _),
-    "ax_rolling_dau"       -> (rollingDau _),
-    "ax_rolling_wau_hll"   -> (rollingWauHll _),
-    "ax_error_spikes"      -> (errorSpikes _),
-    "ax_funnel_stages"     -> (funnelStages _),
-    "ax_retention_cohorts" -> (retentionCohorts _),
-    "ax_hourly_gapfill"    -> (hourlyGapfill _),
-    "ax_forward_fill"      -> (forwardFill _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_decile_lift"      -> decileLiftSql,
-    "ax_activity_streaks" -> activityStreaksSql,
-    "ax_budget_pacing"    -> budgetPacingSql,
-    "ax_cohort_ltv"        -> cohortLtvSql,
-    "ax_attribution_linear" -> attributionLinearSql,
-    "ax_rolling_dau"       -> rollingDauSql,
-    "ax_rolling_wau_hll"   -> rollingWauHllSql,
-    "ax_error_spikes"      -> errorSpikesSql,
-    "ax_funnel_stages"     -> funnelStagesSql,
-    "ax_retention_cohorts" -> retentionCohortsSql,
-    "ax_hourly_gapfill"    -> hourlyGapfillSql,
-    "ax_forward_fill"      -> forwardFillSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_decile_lift", decileLift, decileLiftSql),
+    Gate("ax_activity_streaks", activityStreaks, activityStreaksSql),
+    Gate("ax_budget_pacing", budgetPacing, budgetPacingSql),
+    Gate("ax_cohort_ltv", cohortLtv, cohortLtvSql),
+    Gate("ax_attribution_linear", attributionLinear, attributionLinearSql),
+    Gate("ax_rolling_dau", rollingDau, rollingDauSql),
+    Gate("ax_rolling_wau_hll", rollingWauHll, rollingWauHllSql),
+    Gate("ax_error_spikes", errorSpikes, errorSpikesSql),
+    Gate("ax_funnel_stages", funnelStages, funnelStagesSql),
+    Gate("ax_retention_cohorts", retentionCohorts, retentionCohortsSql),
+    Gate("ax_hourly_gapfill", hourlyGapfill, hourlyGapfillSql),
+    Gate("ax_forward_fill", forwardFill, forwardFillSql)
+  )
 }

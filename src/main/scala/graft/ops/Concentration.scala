@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Revenue-concentration analytics: the Gini coefficient of customer
   * spend and the decile gains table — "how unequal is the customer
@@ -252,13 +253,9 @@ object Concentration {
       |  CAST(SUM(x) * 1000000 // MIN(total) AS BIGINT) AS share_ppm
       |FROM c GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_revenue_gini" -> (revenueGini _),
-    "ax_decile_gains" -> (decileGains _),
-    "ax_abc_class"    -> (abcClass _))
-
-  def oracleSql: Map[String, String] = Map(
-    "ax_revenue_gini" -> revenueGiniSql,
-    "ax_decile_gains" -> decileGainsSql,
-    "ax_abc_class"    -> abcClassSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_revenue_gini", revenueGini, revenueGiniSql),
+    Gate("ax_decile_gains", decileGains, decileGainsSql),
+    Gate("ax_abc_class", abcClass, abcClassSql)
+  )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Corpus-hygiene operators a training-data pipeline runs before a
   * model ever sees a token: benchmark decontamination and sensitive-term
@@ -438,23 +439,13 @@ object Curation {
        |  md5(string_agg(piece, ' ' ORDER BY blk)) AS corrupt_hash
        |FROM ranked GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_span_corrupt"   -> (spanCorrupt _),
-    "tx_dup_ngram_rate" -> (dupNgramRate _),
-    "tx_contam_report"  -> (contamReport _),
-    "tx_decontam"       -> (decontam _),
-    "tx_decontam_fuzzy" -> (decontamFuzzy _),
-    "tx_redact"         -> (redact _),
-    "dd_source_cap"     -> (sourceCap _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "tx_span_corrupt"   -> spanCorruptSql,
-    "tx_dup_ngram_rate" -> dupNgramRateSql,
-    "tx_contam_report"  -> contamReportSql,
-    "tx_decontam"       -> decontamSql,
-    "tx_decontam_fuzzy" -> decontamFuzzySql,
-    "tx_redact"         -> redactSql,
-    "dd_source_cap"     -> sourceCapSql
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_span_corrupt", spanCorrupt, spanCorruptSql),
+    Gate("tx_dup_ngram_rate", dupNgramRate, dupNgramRateSql),
+    Gate("tx_contam_report", contamReport, contamReportSql),
+    Gate("tx_decontam", decontam, decontamSql),
+    Gate("tx_decontam_fuzzy", decontamFuzzy, decontamFuzzySql),
+    Gate("tx_redact", redact, redactSql),
+    Gate("dd_source_cap", sourceCap, sourceCapSql)
   )
 }

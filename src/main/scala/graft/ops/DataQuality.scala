@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Data-quality operators: single-pass column profiling and statistical
   * outlier detection — the screening steps that run over every ingest
@@ -388,21 +389,13 @@ object DataQuality {
       |    OR o_custkey IS NULL
       |) ORDER BY relationship""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_fk_orphans" -> (fkOrphans _),
-    "ax_k_anonymity" -> (kAnonymity _),
-    "ax_dp_geometric" -> (dpGeometric _),
-    "ax_profile"  -> (profile _),
-    "ax_outliers" -> (outliers _),
-    "ax_benford"  -> (benford _),
-    "ax_disorder_audit" -> (disorderAudit _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_fk_orphans" -> fkOrphansSql,
-    "ax_k_anonymity" -> kAnonymitySql,
-    "ax_dp_geometric" -> dpGeometricSql,
-    "ax_profile"  -> profileSql,
-    "ax_outliers" -> outliersSql,
-    "ax_benford"  -> benfordSql,
-    "ax_disorder_audit" -> disorderAuditSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_fk_orphans", fkOrphans, fkOrphansSql),
+    Gate("ax_k_anonymity", kAnonymity, kAnonymitySql),
+    Gate("ax_dp_geometric", dpGeometric, dpGeometricSql),
+    Gate("ax_profile", profile, profileSql),
+    Gate("ax_outliers", outliers, outliersSql),
+    Gate("ax_benford", benford, benfordSql),
+    Gate("ax_disorder_audit", disorderAudit, disorderAuditSql)
+  )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{cosineFloor, dotLong}
+import graft.Gate
 
 /** Shared MinHash + LSH machinery for the near-dup operators.
   *
@@ -3584,91 +3585,52 @@ object Dedup {
        |WHERE 2 * inter >= sa.sz + sb.sz - inter
        |ORDER BY a, b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_setjoin_exact"  -> (setjoinExact _),
-    "dd_containment"    -> (containment _),
-    "tx_dedup_impact"   -> (dedupImpact _),
-    "tx_quality_dup_audit" -> (qualityDupAudit _),
-    "dd_method_compare" -> (methodCompare _),
-    "tx_dataset_card"   -> (datasetCard _),
-    "dd_cc_incremental" -> (ccIncremental _),
-    "dd_lsh_tuning"     -> (lshTuning _),
-    "dd_semdedup_sweep" -> (semDedupSweep _),
-    "dd_bloom_para"     -> (bloomPara _),
-    "dd_curation_funnel" -> (curationFunnel _),
-    "dd_dup_clusters"   -> (dupClusters _),
-    "dd_cc_bigstar"     -> (ccBigStar _),
-    "dd_cluster_retain" -> (clusterRetain _),
-    "dd_dup_aware_sampling" -> (dupAwareSampling _),
-    "dd_cluster_sizes"  -> (clusterSizes _),
-    "dd_source_flow"    -> (sourceFlow _),
-    "dd_bucket_skew"    -> (bucketSkew _),
-    "tx_split_leakage"  -> (splitLeakage _),
-    "dd_exact_keep_min" -> (exactKeepMin _),
-    "dd_exact_groups"   -> (exactGroups _),
-    "dd_minhash_pairs"  -> (minhashPairs _),
-    "dd_simhash_pairs"  -> (simhashPairs _),
-    "dd_ngram_jaccard"  -> (ngramJaccard _),
-    "dd_embed_neardup"  -> (embedNearDup _),
-    "dd_approx_users"   -> (approxUsers _),
-    "dd_hll_merge"      -> (hllMerge _),
-    "dd_lsh_recall"     -> (lshRecall _),
-    "dd_substring_dup"  -> (substringDup _),
-    "dd_substring_span" -> (substringSpan _),
-    "dd_substring_span_s" -> (substringSpanSampled _),
-    "dd_span_guarantee" -> (spanGuarantee _),
-    "dd_span_guarantee_s" -> (spanGuaranteeSampled _),
-    "tx_span_dedup"     -> (spanDedupRewrite _),
-    "tx_span_dedup_s"   -> (spanDedupSampled _),
-    "dd_incremental_dup" -> (incrementalDup _),
-    "dd_semdedup"       -> (semDedup _),
-    "dd_semdedup_rep"   -> (semDedupRep _),
-    "dd_minhash_est"    -> (minhashEst _),
-    "dd_minhash_bbit"   -> (minhashBbit _),
-    "dd_hll_intersect"  -> (hllIntersect _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "tx_dedup_impact"   -> dedupImpactSql,
-    "tx_quality_dup_audit" -> qualityDupAuditSql,
-    "dd_method_compare" -> methodCompareSql,
-    "tx_dataset_card"   -> datasetCardSql,
-    "dd_setjoin_exact"  -> setjoinExactSql,
-    "dd_containment"    -> containmentSql,
-    "dd_cc_incremental" -> dupClustersSql,
-    "dd_lsh_tuning"     -> lshTuningSql,
-    "dd_semdedup_sweep" -> semDedupSweepSql,
-    "dd_bloom_para"     -> bloomParaSql,
-    "dd_curation_funnel" -> curationFunnelSql,
-    "dd_dup_clusters"   -> dupClustersSql,
-    "dd_cc_bigstar"     -> dupClustersSql,
-    "dd_cluster_retain" -> clusterRetainSql,
-    "dd_dup_aware_sampling" -> dupAwareSamplingSql,
-    "dd_cluster_sizes"  -> clusterSizesSql,
-    "dd_source_flow"    -> sourceFlowSql,
-    "dd_bucket_skew"    -> bucketSkewSql,
-    "tx_split_leakage"  -> splitLeakageSql,
-    "dd_exact_keep_min" -> exactKeepMinSql,
-    "dd_exact_groups"   -> exactGroupsSql,
-    "dd_minhash_pairs"  -> MinHashLsh.oracleSql(wordShingleTokCte),
-    "dd_incremental_dup" -> MinHashLsh.probeOracleSql(wordShingleTokCte, NewDocPredSql),
-    "dd_ngram_jaccard"  -> MinHashLsh.oracleSql(charNgramTokCte),
-    "dd_simhash_pairs"  -> simhashPairsSql,
-    "dd_embed_neardup"  -> embedNearDupSql,
-    "dd_approx_users"   -> approxUsersSql,
-    "dd_hll_merge"      -> hllMergeSql,
-    "dd_lsh_recall"     -> lshRecallSql,
-    "dd_substring_dup"  -> substringDupSql,
-    "dd_substring_span" -> substringSpanSql,
-    "dd_substring_span_s" -> substringSpanSampledSql,
-    "tx_span_dedup"     -> spanDedupSql,
-    "tx_span_dedup_s"   -> spanDedupSampledSql,
-    "dd_span_guarantee" -> spanGuaranteeSql,
-    "dd_span_guarantee_s" -> spanGuaranteeSampledSql,
-    "dd_semdedup"       -> semDedupSql,
-    "dd_semdedup_rep"   -> semDedupRepSql,
-    "dd_minhash_est"    -> MinHashLsh.estimateOracleSql(wordShingleTokCte),
-    "dd_minhash_bbit"   -> MinHashLsh.bbitOracleSql(wordShingleTokCte),
-    "dd_hll_intersect"  -> hllIntersectSql
+  val gates: Seq[Gate] = Seq(
+    Gate("dd_setjoin_exact", setjoinExact, setjoinExactSql),
+    Gate("dd_containment", containment, containmentSql),
+    Gate("tx_dedup_impact", dedupImpact, dedupImpactSql),
+    Gate("tx_quality_dup_audit", qualityDupAudit, qualityDupAuditSql),
+    Gate("dd_method_compare", methodCompare, methodCompareSql),
+    Gate("tx_dataset_card", datasetCard, datasetCardSql),
+    Gate("dd_cc_incremental", ccIncremental, dupClustersSql),
+    Gate("dd_lsh_tuning", lshTuning, lshTuningSql),
+    Gate("dd_semdedup_sweep", semDedupSweep, semDedupSweepSql),
+    Gate("dd_bloom_para", bloomPara, bloomParaSql),
+    Gate("dd_curation_funnel", curationFunnel, curationFunnelSql),
+    Gate("dd_dup_clusters", dupClusters, dupClustersSql),
+    Gate("dd_cc_bigstar", ccBigStar, dupClustersSql),
+    Gate("dd_cluster_retain", clusterRetain, clusterRetainSql),
+    Gate("dd_dup_aware_sampling", dupAwareSampling, dupAwareSamplingSql),
+    Gate("dd_cluster_sizes", clusterSizes, clusterSizesSql),
+    Gate("dd_source_flow", sourceFlow, sourceFlowSql),
+    Gate("dd_bucket_skew", bucketSkew, bucketSkewSql),
+    Gate("tx_split_leakage", splitLeakage, splitLeakageSql),
+    Gate("dd_exact_keep_min", exactKeepMin, exactKeepMinSql),
+    Gate("dd_exact_groups", exactGroups, exactGroupsSql),
+    Gate("dd_minhash_pairs", minhashPairs,
+      MinHashLsh.oracleSql(wordShingleTokCte)),
+    Gate("dd_simhash_pairs", simhashPairs, simhashPairsSql),
+    Gate("dd_ngram_jaccard", ngramJaccard,
+      MinHashLsh.oracleSql(charNgramTokCte)),
+    Gate("dd_embed_neardup", embedNearDup, embedNearDupSql),
+    Gate("dd_approx_users", approxUsers, approxUsersSql),
+    Gate("dd_hll_merge", hllMerge, hllMergeSql),
+    Gate("dd_lsh_recall", lshRecall, lshRecallSql),
+    Gate("dd_substring_dup", substringDup, substringDupSql),
+    Gate("dd_substring_span", substringSpan, substringSpanSql),
+    Gate("dd_substring_span_s", substringSpanSampled, substringSpanSampledSql),
+    Gate("dd_span_guarantee", spanGuarantee, spanGuaranteeSql),
+    Gate("dd_span_guarantee_s", spanGuaranteeSampled, spanGuaranteeSampledSql),
+    Gate("tx_span_dedup", spanDedupRewrite, spanDedupSql),
+    Gate("tx_span_dedup_s", spanDedupSampled, spanDedupSampledSql),
+    Gate("dd_incremental_dup", incrementalDup,
+      MinHashLsh.probeOracleSql(wordShingleTokCte, NewDocPredSql)),
+    Gate("dd_semdedup", semDedup, semDedupSql),
+    Gate("dd_semdedup_rep", semDedupRep, semDedupRepSql),
+    Gate("dd_minhash_est", minhashEst,
+      MinHashLsh.estimateOracleSql(wordShingleTokCte)),
+    Gate("dd_minhash_bbit", minhashBbit,
+      MinHashLsh.bbitOracleSql(wordShingleTokCte)),
+    Gate("dd_hll_intersect", hllIntersect, hllIntersectSql)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Corpus-mixture drift audits: pairwise total-variation distance
   * between source unigram distributions and per-source language
@@ -147,11 +148,8 @@ object DriftAudit {
       |  CAST(1000000 - SUM(sp * sp) // 1000000 AS BIGINT) AS gini_ppm
       |FROM sh GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_source_tv" -> (sourceTv _),
-    "tx_lang_gini" -> (langGini _))
-
-  def oracleSql: Map[String, String] = Map(
-    "tx_source_tv" -> sourceTvSql,
-    "tx_lang_gini" -> langGiniSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_source_tv", sourceTv, sourceTvSql),
+    Gate("tx_lang_gini", langGini, langGiniSql)
+  )
 }

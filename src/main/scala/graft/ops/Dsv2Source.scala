@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Gate queries for the custom DataSource V2 connector
   * (graft.sources.GraftLines) — the source must not merely parse, it
@@ -55,7 +56,7 @@ object Dsv2Source {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy(col("source").asc)
 
-  private val dsv2PushdownSql =
+  private[ops] val dsv2PushdownSql =
     """SELECT source, COUNT(*) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
       |FROM documents
@@ -355,25 +356,14 @@ object Dsv2Source {
       |FROM documents WHERE n_chars >= 100
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_dsv2_pushdown"  -> (dsv2Pushdown _),
-    "ax_dsv2_roundtrip" -> (dsv2Roundtrip _),
-    "ax_dsv2_join"      -> (dsv2Join _),
-    "ax_dsv2_dpp"       -> (dsv2Dpp _),
-    "ax_dsv2_zonemap"   -> (dsv2Zonemap _),
-    "ax_dsv2_agg_push"  -> (dsv2AggPush _),
-    "st_dsv2_stream"    -> (dsv2Stream _),
-    "st_dsv2_sink"      -> (dsv2Sink _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_dsv2_pushdown"  -> dsv2PushdownSql,
-    "ax_dsv2_roundtrip" -> dsv2RoundtripSql,
-    "ax_dsv2_join"      -> dsv2JoinSql,
-    "ax_dsv2_dpp"       -> dsv2DppSql,
-    "ax_dsv2_zonemap"   -> dsv2ZonemapSql,
-    "ax_dsv2_agg_push"  -> dsv2AggPushSql,
-    "st_dsv2_stream"    -> dsv2StreamSql,
-    "st_dsv2_sink"      -> dsv2SinkSql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_dsv2_pushdown", dsv2Pushdown, dsv2PushdownSql),
+    Gate("ax_dsv2_roundtrip", dsv2Roundtrip, dsv2RoundtripSql),
+    Gate("ax_dsv2_join", dsv2Join, dsv2JoinSql),
+    Gate("ax_dsv2_dpp", dsv2Dpp, dsv2DppSql),
+    Gate("ax_dsv2_zonemap", dsv2Zonemap, dsv2ZonemapSql),
+    Gate("ax_dsv2_agg_push", dsv2AggPush, dsv2AggPushSql),
+    Gate("st_dsv2_stream", dsv2Stream, dsv2StreamSql),
+    Gate("st_dsv2_sink", dsv2Sink, dsv2SinkSql)
   )
 }

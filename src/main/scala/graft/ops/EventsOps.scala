@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Event-log operators: semi-structured (JSON) extraction and the
   * binned range join — both everyday needs of a 100 TB event pipeline.
@@ -1293,55 +1294,30 @@ object EventsOps {
       |  SELECT 'append-c3_append', B + 1, B + 1, 'c3_append' FROM mx)
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_occ_commits"     -> (occCommits _),
-    "ax_occ_rebase"      -> (occRebase _),
-    "ax_ewma_smooth"      -> (ewmaSmooth _),
-    "ax_ntile_bins"       -> (ntileBins _),
-    "ax_ntile_approx"     -> (ntileApprox _),
-    "ax_corrupt_ingest"   -> (corruptIngest _),
-    "ax_schema_evolution" -> (schemaEvolution _),
-    "ax_zorder_layout"   -> (zorderLayout _),
-    "ax_sorted_layout"   -> (sortedLayout _),
-    "ax_rle_advisor"     -> (rleAdvisor _),
-    "ax_partitioned_write" -> (partitionedWrite _),
-    "ax_user_journey"    -> (userJourney _),
-    "ax_markov_events"   -> (markovEvents _),
-    "ax_event_motifs"    -> (eventMotifs _),
-    "ax_props_json"      -> (propsJson _),
-    "ax_props_variant"   -> (propsVariant _),
-    "ax_manifest_prune"  -> (manifestPrune _),
-    "ax_manifest_bloom"  -> (manifestBloom _),
-    "ax_partition_evolution" -> (partitionEvolution _),
-    "ax_interval_errors" -> (intervalErrors _),
-    "ax_jsonl_roundtrip" -> (jsonlRoundtrip _),
-    "ax_csv_roundtrip"   -> (csvRoundtrip _),
-    "ax_orc_roundtrip"   -> (orcRoundtrip _),
-    "ax_xml_roundtrip"   -> (xmlRoundtrip _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_occ_commits"     -> occCommitsSql,
-    "ax_occ_rebase"      -> occRebaseSql,
-    "ax_ewma_smooth"      -> ewmaSmoothSql,
-    "ax_ntile_bins"       -> ntileBinsSql,
-    "ax_ntile_approx"     -> ntileApproxSql,
-    "ax_corrupt_ingest"   -> corruptIngestSql,
-    "ax_schema_evolution" -> schemaEvolutionSql,
-    "ax_zorder_layout"   -> zorderLayoutSql,
-    "ax_sorted_layout"   -> sortedLayoutSql,
-    "ax_rle_advisor"     -> rleAdvisorSql,
-    "ax_partitioned_write" -> partitionedWriteSql,
-    "ax_user_journey"    -> userJourneySql,
-    "ax_markov_events"   -> markovEventsSql,
-    "ax_event_motifs"    -> eventMotifsSql,
-    "ax_props_json"      -> propsJsonSql,
-    "ax_props_variant"   -> propsVariantSql,
-    "ax_manifest_prune"  -> manifestPruneSql,
-    "ax_manifest_bloom"  -> manifestBloomSql,
-    "ax_partition_evolution" -> partitionEvolutionSql,
-    "ax_interval_errors" -> intervalErrorsSql,
-    "ax_jsonl_roundtrip" -> jsonlRoundtripSql,
-    "ax_csv_roundtrip"   -> csvRoundtripSql,
-    "ax_orc_roundtrip"   -> orcRoundtripSql,
-    "ax_xml_roundtrip"   -> xmlRoundtripSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_occ_commits", occCommits, occCommitsSql),
+    Gate("ax_occ_rebase", occRebase, occRebaseSql),
+    Gate("ax_ewma_smooth", ewmaSmooth, ewmaSmoothSql),
+    Gate("ax_ntile_bins", ntileBins, ntileBinsSql),
+    Gate("ax_ntile_approx", ntileApprox, ntileApproxSql),
+    Gate("ax_corrupt_ingest", corruptIngest, corruptIngestSql),
+    Gate("ax_schema_evolution", schemaEvolution, schemaEvolutionSql),
+    Gate("ax_zorder_layout", zorderLayout, zorderLayoutSql),
+    Gate("ax_sorted_layout", sortedLayout, sortedLayoutSql),
+    Gate("ax_rle_advisor", rleAdvisor, rleAdvisorSql),
+    Gate("ax_partitioned_write", partitionedWrite, partitionedWriteSql),
+    Gate("ax_user_journey", userJourney, userJourneySql),
+    Gate("ax_markov_events", markovEvents, markovEventsSql),
+    Gate("ax_event_motifs", eventMotifs, eventMotifsSql),
+    Gate("ax_props_json", propsJson, propsJsonSql),
+    Gate("ax_props_variant", propsVariant, propsVariantSql),
+    Gate("ax_manifest_prune", manifestPrune, manifestPruneSql),
+    Gate("ax_manifest_bloom", manifestBloom, manifestBloomSql),
+    Gate("ax_partition_evolution", partitionEvolution, partitionEvolutionSql),
+    Gate("ax_interval_errors", intervalErrors, intervalErrorsSql),
+    Gate("ax_jsonl_roundtrip", jsonlRoundtrip, jsonlRoundtripSql),
+    Gate("ax_csv_roundtrip", csvRoundtrip, csvRoundtripSql),
+    Gate("ax_orc_roundtrip", orcRoundtrip, orcRoundtripSql),
+    Gate("ax_xml_roundtrip", xmlRoundtrip, xmlRoundtripSql)
+  )
 }

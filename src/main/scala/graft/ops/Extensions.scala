@@ -1,41 +1,24 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Gate
 
-/** Registry of the extension operators beyond reference parity (SURVEY.md
-  * §2b + the north star's LLM-data-pipeline set): analytics (joins, aggs,
-  * windows, sorts, set ops), dedup family, similarity search, text
-  * analysis, multimodal plumbing. Populated module by module; each module
-  * contributes `queries` (Spark) and, where SQL-expressible, `oracleSql`
-  * (DuckDB).
+/** The extension gates beyond reference parity (SURVEY.md §2b and the
+  * LLM-data-pipeline set): analytics (joins, aggregates, windows, sorts,
+  * set ops), dedup, similarity search, text analysis, multimodal
+  * plumbing, streaming and the SQL surface. Each module declares its
+  * `gates`, every one with its Spark query and its DuckDB oracle; this
+  * list names each module once.
   */
 object Extensions {
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Analytics.queries ++ Dedup.queries ++ TextAnalysis.queries ++
-      Similarity.queries ++ GraphAnn.queries ++
-      Multimodal.queries ++ StreamingGate.queries ++
-      AsOf.queries ++ SqlSurface.queries ++ Bucketing.queries ++
-      EventsOps.queries ++ Cohorts.queries ++ DataQuality.queries ++
-      Reshape.queries ++ Stats.queries ++ Graph.queries ++
-      Chunking.queries ++ Maintenance.queries ++ Curation.queries ++
-      ScanPruning.queries ++ Lifecycle.queries ++ Selection.queries ++
-      TpchShapes.queries ++ TpchShapes2.queries ++ MatViews.queries ++
-      Dsv2Source.queries ++ Lineage.queries ++
-      Association.queries ++ Governance.queries ++
-      DriftAudit.queries ++ TemporalStats.queries ++ Concentration.queries ++
-      BitmapIndex.queries
-  def oracleSql: Map[String, String] =
-    Analytics.oracleSql ++ Dedup.oracleSql ++ TextAnalysis.oracleSql ++
-      Similarity.oracleSql ++ GraphAnn.oracleSql ++
-      Multimodal.oracleSql ++ StreamingGate.oracleSql ++
-      AsOf.oracleSql ++ SqlSurface.oracleSql ++ Bucketing.oracleSql ++
-      EventsOps.oracleSql ++ Cohorts.oracleSql ++ DataQuality.oracleSql ++
-      Reshape.oracleSql ++ Stats.oracleSql ++ Graph.oracleSql ++
-      Chunking.oracleSql ++ Maintenance.oracleSql ++ Curation.oracleSql ++
-      ScanPruning.oracleSql ++ Lifecycle.oracleSql ++ Selection.oracleSql ++
-      TpchShapes.oracleSql ++ TpchShapes2.oracleSql ++ MatViews.oracleSql ++
-      Dsv2Source.oracleSql ++ Lineage.oracleSql ++
-      Association.oracleSql ++ Governance.oracleSql ++
-      DriftAudit.oracleSql ++ TemporalStats.oracleSql ++
-      Concentration.oracleSql ++ BitmapIndex.oracleSql
+  def gates: Seq[Gate] = Seq(
+    Analytics.gates, Dedup.gates, TextAnalysis.gates, Similarity.gates,
+    GraphAnn.gates, Multimodal.gates, StreamingGate.gates, AsOf.gates,
+    SqlSurface.gates, Bucketing.gates, EventsOps.gates, Cohorts.gates,
+    DataQuality.gates, Reshape.gates, Stats.gates, Graph.gates,
+    Chunking.gates, Maintenance.gates, Curation.gates, ScanPruning.gates,
+    Lifecycle.gates, Selection.gates, TpchShapes.gates, TpchShapes2.gates,
+    MatViews.gates, Dsv2Source.gates, Lineage.gates, Association.gates,
+    Governance.gates, DriftAudit.gates, TemporalStats.gates,
+    Concentration.gates, BitmapIndex.gates
+  ).flatten
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Data-governance planning operators: right-to-be-forgotten purge
   * cascades and retention (TTL) sweeps. Both follow the
@@ -127,11 +128,8 @@ object Governance {
       |FROM events, a WHERE ts < max_ts - INTERVAL 7 DAY
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_rtbf_purge"      -> (rtbfPurge _),
-    "ax_retention_sweep" -> (retentionSweep _))
-
-  def oracleSql: Map[String, String] = Map(
-    "ax_rtbf_purge"      -> rtbfPurgeSql,
-    "ax_retention_sweep" -> retentionSweepSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_rtbf_purge", rtbfPurge, rtbfPurgeSql),
+    Gate("ax_retention_sweep", retentionSweep, retentionSweepSql)
+  )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Graph analytics over relational data. Connected components already
   * powers dd_dup_clusters (Dedup.connectedComponents); this module adds
@@ -1003,27 +1004,16 @@ object Graph {
       |FROM a2 JOIN a1 ON a2.s = a1.s
       |ORDER BY authority DESC, suppkey ASC LIMIT 15""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_hits_bipartite" -> (hitsBipartite _),
-    "ax_triangle_count" -> (triangleCount _),
-    "ax_pagerank_parts" -> (pagerankParts _),
-    "ax_bfs_hops"       -> (bfsHops _),
-    "ax_kcore"          -> (kcore _),
-    "ax_jaccard_links"  -> (jaccardLinks _),
-    "ax_degree_dist"    -> (degreeDist _),
-    "ax_ppr_seeds"      -> (pprSeeds _),
-    "ax_sssp_weighted"  -> (ssspWeighted _),
-    "ax_common_nbrs"    -> (commonNbrs _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_hits_bipartite" -> hitsBipartiteSql,
-    "ax_triangle_count" -> triangleCountSql,
-    "ax_pagerank_parts" -> pagerankPartsSql,
-    "ax_bfs_hops"       -> bfsHopsSql,
-    "ax_kcore"          -> kcoreSql,
-    "ax_jaccard_links"  -> jaccardLinksSql,
-    "ax_degree_dist"    -> degreeDistSql,
-    "ax_ppr_seeds"      -> pprSeedsSql,
-    "ax_sssp_weighted"  -> ssspWeightedSql,
-    "ax_common_nbrs"    -> commonNbrsSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_hits_bipartite", hitsBipartite, hitsBipartiteSql),
+    Gate("ax_triangle_count", triangleCount, triangleCountSql),
+    Gate("ax_pagerank_parts", pagerankParts, pagerankPartsSql),
+    Gate("ax_bfs_hops", bfsHops, bfsHopsSql),
+    Gate("ax_kcore", kcore, kcoreSql),
+    Gate("ax_jaccard_links", jaccardLinks, jaccardLinksSql),
+    Gate("ax_degree_dist", degreeDist, degreeDistSql),
+    Gate("ax_ppr_seeds", pprSeeds, pprSeedsSql),
+    Gate("ax_sssp_weighted", ssspWeighted, ssspWeightedSql),
+    Gate("ax_common_nbrs", commonNbrs, commonNbrsSql)
+  )
 }

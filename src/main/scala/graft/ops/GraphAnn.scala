@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.cosineFloor
+import graft.Gate
 
 /** Graph-based ANN — the NN-descent tier of the similarity family
   * (SURVEY.md §2b similarity search; the construction HNSW/NSG build
@@ -373,13 +374,8 @@ object GraphAnn {
        |FROM curve, np ORDER BY round""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_nnd_round"    -> (nndRound _),
-    "sim_nnd_converge" -> (nndConverge _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "sim_nnd_round"    -> nndRoundSql,
-    "sim_nnd_converge" -> nndConvergeSql
+  val gates: Seq[Gate] = Seq(
+    Gate("sim_nnd_round", nndRound, nndRoundSql),
+    Gate("sim_nnd_converge", nndConverge, nndConvergeSql)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Table-lifecycle operators: the jobs that keep a 100 TB lake usable
   * over time — small-file compaction, versioned (time-travel) reads off
@@ -442,21 +443,13 @@ object Lifecycle {
        |ORDER BY pri ASC, doc_id ASC LIMIT $WSampleN""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_weighted_sample" -> (weightedSample _),
-    "ax_vacuum_plan"    -> (vacuumPlan _),
-    "ax_compact_files"  -> (compactFiles _),
-    "ax_time_travel"    -> (timeTravel _),
-    "tx_shard_export"   -> (shardExport _),
-    "tx_global_shuffle" -> (globalShuffle _),
-    "tx_assign_ids"     -> (assignIds _))
-
-  val oracleSql: Map[String, String] = Map(
-    "tx_weighted_sample" -> weightedSampleSql,
-    "ax_vacuum_plan"    -> vacuumPlanSql,
-    "ax_compact_files"  -> compactFilesSql,
-    "ax_time_travel"    -> timeTravelSql,
-    "tx_shard_export"   -> shardExportSql,
-    "tx_global_shuffle" -> globalShuffleSql,
-    "tx_assign_ids"     -> assignIdsSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_weighted_sample", weightedSample, weightedSampleSql),
+    Gate("ax_vacuum_plan", vacuumPlan, vacuumPlanSql),
+    Gate("ax_compact_files", compactFiles, compactFilesSql),
+    Gate("ax_time_travel", timeTravel, timeTravelSql),
+    Gate("tx_shard_export", shardExport, shardExportSql),
+    Gate("tx_global_shuffle", globalShuffle, globalShuffleSql),
+    Gate("tx_assign_ids", assignIds, assignIdsSql)
+  )
 }

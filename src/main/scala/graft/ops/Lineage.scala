@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.execution.datasources.v2.{
   DataSourceV2Relation, DataSourceV2ScanRelation}
 
+import graft.Gate
+
 /** Column-level lineage extraction — the governance answer to "which
   * source columns can influence this output column's VALUE", derived
   * mechanically from the analyzed plan (SURVEY.md §2b governance tier;
@@ -264,7 +266,7 @@ object Lineage {
   // row diff.
   // -------------------------------------------------------------------
   private def lineage(spark: SparkSession, dir: String): DataFrame =
-    of(spark, Extensions.queries("ax_ship_priority")(spark, dir))
+    of(spark, Analytics.shipPriority(spark, dir))
 
   private val lineageSql =
     """SELECT * FROM (VALUES
@@ -287,7 +289,7 @@ object Lineage {
   // SF.
   // -------------------------------------------------------------------
   private def lineageWindow(spark: SparkSession, dir: String): DataFrame =
-    ofKinds(spark, Extensions.queries("ax_window_suite")(spark, dir))
+    ofKinds(spark, Analytics.windowSuite(spark, dir))
 
   private val lineageWindowSql =
     """SELECT * FROM (VALUES
@@ -325,7 +327,7 @@ object Lineage {
   // provenance). Oracle = the hand-derived truth.
   // -------------------------------------------------------------------
   private def lineageMv(spark: SparkSession, dir: String): DataFrame = {
-    val served = Extensions.queries("ax_mv_star")(spark, dir)
+    val served = MatViews.mvStar(spark, dir)
     ofServed(spark, served)
   }
 
@@ -394,17 +396,10 @@ object Lineage {
       |  AS t(out_column, src_table, src_column)
       |ORDER BY 1, 2, 3""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_lineage"        -> (lineage _),
-    "ax_lineage_window" -> (lineageWindow _),
-    "ax_lineage_mv"     -> (lineageMv _),
-    "ax_lineage_dsv2"   -> (lineageDsv2 _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_lineage"        -> lineageSql,
-    "ax_lineage_window" -> lineageWindowSql,
-    "ax_lineage_mv"     -> lineageMvSql,
-    "ax_lineage_dsv2"   -> lineageDsv2Sql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_lineage", lineage, lineageSql),
+    Gate("ax_lineage_window", lineageWindow, lineageWindowSql),
+    Gate("ax_lineage_mv", lineageMv, lineageMvSql),
+    Gate("ax_lineage_dsv2", lineageDsv2, lineageDsv2Sql)
   )
 }

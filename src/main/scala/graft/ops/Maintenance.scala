@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Pipeline-maintenance operators: declarative data-quality rule checks
   * and the keyed upsert (merge) pattern — the two jobs that bracket
@@ -772,31 +773,18 @@ object Maintenance {
       |FROM d1 FULL OUTER JOIN bf ON d1.segment = bf.segment
       |ORDER BY segment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_late_dim_backfill" -> (lateDimBackfill _),
-    "ax_pit_join"        -> (pitJoin _),
-    "ax_mor_read"        -> (morRead _),
-    "ax_table_checksum"  -> (tableChecksum _),
-    "ax_scd2_customer"   -> (scd2CustomerBuild _),
-    "ax_bitemporal"      -> (bitemporal _),
-    "ax_cdc_apply"       -> (cdcApply _),
-    "dd_survivorship"    -> (survivorship _),
-    "ax_dq_rules"        -> (dqRules _),
-    "ax_upsert_orders"   -> (upsertOrders _),
-    "ax_snapshot_diff"   -> (snapshotDiff _),
-    "ax_incremental_agg" -> (incrementalAgg _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_late_dim_backfill" -> lateDimBackfillSql,
-    "ax_pit_join"        -> pitJoinSql,
-    "ax_mor_read"        -> morReadSql,
-    "ax_table_checksum"  -> tableChecksumSql,
-    "ax_scd2_customer"   -> scd2CustomerSql,
-    "ax_bitemporal"      -> bitemporalSql,
-    "ax_cdc_apply"       -> cdcApplySql,
-    "dd_survivorship"    -> survivorshipSql,
-    "ax_dq_rules"        -> dqRulesSql,
-    "ax_upsert_orders"   -> upsertOrdersSql,
-    "ax_snapshot_diff"   -> snapshotDiffSql,
-    "ax_incremental_agg" -> incrementalAggSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_late_dim_backfill", lateDimBackfill, lateDimBackfillSql),
+    Gate("ax_pit_join", pitJoin, pitJoinSql),
+    Gate("ax_mor_read", morRead, morReadSql),
+    Gate("ax_table_checksum", tableChecksum, tableChecksumSql),
+    Gate("ax_scd2_customer", scd2CustomerBuild, scd2CustomerSql),
+    Gate("ax_bitemporal", bitemporal, bitemporalSql),
+    Gate("ax_cdc_apply", cdcApply, cdcApplySql),
+    Gate("dd_survivorship", survivorship, survivorshipSql),
+    Gate("ax_dq_rules", dqRules, dqRulesSql),
+    Gate("ax_upsert_orders", upsertOrders, upsertOrdersSql),
+    Gate("ax_snapshot_diff", snapshotDiff, snapshotDiffSql),
+    Gate("ax_incremental_agg", incrementalAgg, incrementalAggSql)
+  )
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 import graft.plans.MvRewrite
+import graft.Gate
 
 /** Materialized-view serving over the lineitem fact (SURVEY.md §2b
   * maintenance/storage tier + the plans/MvRewrite optimizer rule).
@@ -134,7 +135,7 @@ object MatViews {
       .orderBy(col("l_returnflag").asc)
   }
 
-  private val mvRewriteSql =
+  private[ops] val mvRewriteSql =
     """SELECT l_returnflag,
       |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
       |  CAST(SUM(CAST(round(l_extendedprice*(1.0-l_discount)*100)
@@ -307,7 +308,7 @@ object MatViews {
     MvRewrite.install(spark)
   }
 
-  private def mvStar(spark: SparkSession, dir: String): DataFrame = {
+  private[ops] def mvStar(spark: SparkSession, dir: String): DataFrame = {
     serveStarFromMv(spark, dir)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val ord = spark.read.parquet(s"$dir/orders.parquet")
@@ -651,7 +652,7 @@ object MatViews {
       .orderBy(col("l_linestatus").asc)
   }
 
-  private val mvMinMaxSql =
+  private[ops] val mvMinMaxSql =
     """SELECT l_linestatus,
       |  CAST(MAX(CAST(l_quantity AS BIGINT)) AS BIGINT) AS max_qty,
       |  CAST(MIN(CAST(l_quantity AS BIGINT)) AS BIGINT) AS min_qty,
@@ -828,29 +829,16 @@ object MatViews {
       |  CAST(MAX(c) AS BIGINT) AS mv_max
       |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_mv_rewrite" -> (mvRewrite _),
-    "ax_mv_filter"  -> (mvFilter _),
-    "ax_mv_minmax"  -> (mvMinMax _),
-    "ax_mv_star"    -> (mvStar _),
-    "ax_mv_star_attr" -> (mvStarAttr _),
-    "ax_mv_snowflake" -> (mvSnowflake _),
-    "ax_mv_rollup_sets" -> (mvRollupSets _),
-    "ax_mv_star_delta" -> (mvStarDelta _),
-    "ax_mv_delta"   -> (mvDelta _),
-    "ax_mv_cdc"     -> (mvCdc _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_mv_rewrite" -> mvRewriteSql,
-    "ax_mv_filter"  -> mvFilterSql,
-    "ax_mv_minmax"  -> mvMinMaxSql,
-    "ax_mv_star"    -> mvStarSql,
-    "ax_mv_star_attr" -> mvStarAttrSql,
-    "ax_mv_snowflake" -> mvSnowflakeSql,
-    "ax_mv_rollup_sets" -> mvRollupSetsSql,
-    "ax_mv_star_delta" -> mvStarDeltaSql,
-    "ax_mv_delta"   -> mvDeltaSql,
-    "ax_mv_cdc"     -> mvCdcSql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_mv_rewrite", mvRewrite, mvRewriteSql),
+    Gate("ax_mv_filter", mvFilter, mvFilterSql),
+    Gate("ax_mv_minmax", mvMinMax, mvMinMaxSql),
+    Gate("ax_mv_star", mvStar, mvStarSql),
+    Gate("ax_mv_star_attr", mvStarAttr, mvStarAttrSql),
+    Gate("ax_mv_snowflake", mvSnowflake, mvSnowflakeSql),
+    Gate("ax_mv_rollup_sets", mvRollupSets, mvRollupSetsSql),
+    Gate("ax_mv_star_delta", mvStarDelta, mvStarDeltaSql),
+    Gate("ax_mv_delta", mvDelta, mvDeltaSql),
+    Gate("ax_mv_cdc", mvCdc, mvCdcSql)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
   * metadata, with a REAL pure-JVM decode step ([[ImageHeaders]] parses
@@ -1419,26 +1420,26 @@ object Multimodal {
       |    THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged
       |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_aspect_buckets" -> (aspectBuckets _),
-    "mm_metadata"     -> (metadata _),
-    "mm_decode_stats" -> (decodeStats _),
-    "mm_binary_source" -> (binarySource _),
-    "mm_frame_sample" -> (frameSample _),
-    "mm_resize_phash" -> (resizePhash _),
-    "mm_lum_hist"     -> (lumHist _),
-    "mm_grad_energy"  -> (gradEnergy _),
-    "mm_audio_clip"   -> (audioClip _),
-    "mm_audio_resample" -> (audioResample _),
-    "mm_scene_cuts"   -> (sceneCuts _),
-    "mm_audio_stats"  -> (audioStats _),
-    "mm_audio_fp"     -> (audioFp _),
-    "mm_silence_spans" -> (silenceSpans _),
-    "mm_phash_dup"    -> (phashDup _),
-    "mm_joint_dup"    -> (jointDup _),
-    "mm_quarantine"   -> (quarantine _),
-    "mm_exact_dedup"  -> (exactDedup _),
-    "mm_chunk_dedup"  -> (chunkDedup _)
+  val gates: Seq[Gate] = Seq(
+    Gate("mm_aspect_buckets", aspectBuckets, aspectBucketsSql),
+    Gate("mm_metadata", metadata, metadataSql),
+    Gate("mm_decode_stats", decodeStats, decodeStatsSql),
+    Gate("mm_binary_source", binarySource, binarySourceSql),
+    Gate("mm_frame_sample", frameSample, frameSampleSql),
+    Gate("mm_resize_phash", resizePhash, resizePhashSql),
+    Gate("mm_lum_hist", lumHist, lumHistSql),
+    Gate("mm_grad_energy", gradEnergy, gradEnergySql),
+    Gate("mm_audio_clip", audioClip, audioClipSql),
+    Gate("mm_audio_resample", audioResample, audioResampleSql),
+    Gate("mm_scene_cuts", sceneCuts, sceneCutsSql),
+    Gate("mm_audio_stats", audioStats, audioStatsSql),
+    Gate("mm_audio_fp", audioFp, audioFpSql),
+    Gate("mm_silence_spans", silenceSpans, silenceSpansSql),
+    Gate("mm_phash_dup", phashDup, phashDupSql),
+    Gate("mm_joint_dup", jointDup, jointDupSql),
+    Gate("mm_quarantine", quarantine, quarantineSql),
+    Gate("mm_exact_dedup", exactDedup, exactDedupSql),
+    Gate("mm_chunk_dedup", chunkDedup, chunkDedupSql)
   )
 
   // mm_decode_stats oracle: replays the fixture GENERATOR's formulas
@@ -1463,25 +1464,4 @@ object Multimodal {
        |  CAST(MAX(bit_depth) AS BIGINT) AS bit_depth
        |FROM assets GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "mm_aspect_buckets" -> aspectBucketsSql,
-    "mm_metadata"     -> metadataSql,
-    "mm_decode_stats" -> decodeStatsSql,
-    "mm_binary_source" -> binarySourceSql,
-    "mm_frame_sample" -> frameSampleSql,
-    "mm_resize_phash" -> resizePhashSql,
-    "mm_lum_hist"     -> lumHistSql,
-    "mm_grad_energy"  -> gradEnergySql,
-    "mm_audio_clip"   -> audioClipSql,
-    "mm_audio_resample" -> audioResampleSql,
-    "mm_scene_cuts"   -> sceneCutsSql,
-    "mm_audio_stats"  -> audioStatsSql,
-    "mm_audio_fp"     -> audioFpSql,
-    "mm_silence_spans" -> silenceSpansSql,
-    "mm_phash_dup"    -> phashDupSql,
-    "mm_joint_dup"    -> jointDupSql,
-    "mm_quarantine"   -> quarantineSql,
-    "mm_exact_dedup"  -> exactDedupSql,
-    "mm_chunk_dedup"  -> chunkDedupSql
-  )
 }

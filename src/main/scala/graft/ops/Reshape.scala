@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Relational reshaping: unpivot (wide→long melt) and explicit GROUPING
   * SETS — the complements of the pivot/rollup/cube family already in
@@ -31,7 +32,7 @@ object Reshape {
         "metric", "value")
       .orderBy("l_returnflag", "metric")
 
-  private val unpivotMetricsSql =
+  private[ops] val unpivotMetricsSql =
     """WITH w AS (
       |  SELECT l_returnflag,
       |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
@@ -77,11 +78,8 @@ object Reshape {
       |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
       |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_unpivot_metrics" -> (unpivotMetrics _),
-    "ax_grouping_sets"   -> (groupingSets _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_unpivot_metrics" -> unpivotMetricsSql,
-    "ax_grouping_sets"   -> groupingSetsSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_unpivot_metrics", unpivotMetrics, unpivotMetricsSql),
+    Gate("ax_grouping_sets", groupingSets, groupingSetsSql)
+  )
 }

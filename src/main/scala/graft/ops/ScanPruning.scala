@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Sketches
+import graft.Gate
 
 /** Scan-reduction machinery — the two techniques that decide whether a
   * 100 TB join reads 100 TB or 2 TB:
@@ -150,11 +151,8 @@ object ScanPruning {
       |  AND o_orderdate < TIMESTAMP '1997-01-01'
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_dpp_prune"  -> (dppPrune _),
-    "ax_bloom_join" -> (bloomJoin _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_dpp_prune"  -> dppPruneSql,
-    "ax_bloom_join" -> bloomJoinSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_dpp_prune", dppPrune, dppPruneSql),
+    Gate("ax_bloom_join", bloomJoin, bloomJoinSql)
+  )
 }

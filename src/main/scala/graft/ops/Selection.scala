@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Data-SELECTION operators — the step between cleaning and training
   * where a pipeline decides WHICH documents feed the model:
@@ -155,11 +156,7 @@ object Selection {
        |  GROUP BY 1, 2) s
        |ORDER BY score_ppm DESC, doc_id ASC LIMIT $DsirTopN""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_dsir_weights" -> (dsirWeights _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "tx_dsir_weights" -> dsirWeightsSql
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_dsir_weights", dsirWeights, dsirWeightsSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.dotLong
+import graft.Gate
 
 /** Similarity search over the embeddings table (`Array[Float]`, dim 64).
   *
@@ -250,6 +251,9 @@ object Similarity {
       Array.tabulate(n)(k => Array.tabulate(n)(d => v(d)(k))))
   }
 
+  private[ops] val PcaOraclePlaceholder =
+    "SELECT CAST(1 AS BIGINT) AS pca_oracle_not_generated"
+
   /** oracle SQL for sim_pca_recall, generated when the query runs
     * (data-dependent projection literals); the placeholder is never
     * compared — the compare only reads oracles for dumped results,
@@ -257,7 +261,11 @@ object Similarity {
     */
   private val pcaOracleSqlRef =
     new java.util.concurrent.atomic.AtomicReference[String](
-      "SELECT CAST(1 AS BIGINT) AS pca_oracle_not_generated")
+      PcaOraclePlaceholder)
+
+  /** Test hook: back to the placeholder, as before the first run. */
+  private[ops] def resetPcaOracle(): Unit =
+    pcaOracleSqlRef.set(PcaOraclePlaceholder)
 
   private def pcaRecall(spark: SparkSession, dir: String): DataFrame = {
     val topk = udaf(new graft.functions.TopK.TopKByScore(10))
@@ -2713,76 +2721,39 @@ object Similarity {
        |SELECT * FROM ($out) ORDER BY rank""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_mmr_select"     -> (mmrSelect _),
-    "sim_label_knn_acc"  -> (labelKnnAcc _),
-    "sim_rrf_fusion"     -> (rrfFusion _),
-    "sim_rrf_recall"     -> (rrfRecall _),
-    "sim_inertia"        -> (inertia _),
-    "sim_dim_variance"   -> (dimVariance _),
-    "sim_prune_recall"   -> (pruneRecall _),
-    "sim_pca_recall"     -> (pcaRecall _),
-    "sim_mrl_recall"     -> (mrlRecall _),
-    "sim_rp_recall"      -> (rpRecall _),
-    "sim_bucket_drift"   -> (bucketDrift _),
-    "sim_batch_ivf"      -> (batchIvf _),
-    "sim_ivf_sweep"      -> (ivfSweep _),
-    "sim_ivf_persist"    -> (ivfPersist _),
-    "sim_ivf_delta"      -> (ivfDelta _),
-    "sim_hard_negatives" -> (hardNegatives _),
-    "sim_mips_norm"      -> (mipsNorm _),
-    "sim_pq_topk"        -> (pqTopk _),
-    "sim_pq_recall"      -> (pqRecall _),
-    "sim_ivfpq_recall"   -> (ivfpqRecall _),
-    "sim_quantize_audit" -> (quantizeAudit _),
-    "sim_knn_batch"      -> (knnBatch _),
-    "sim_silhouette"     -> (silhouette _),
-    "sim_pair_hist"      -> (pairHist _),
-    "sim_kmeans_assign"  -> (kmeansAssigned _),
-    "sim_ann_recall"     -> (annRecall _),
-    "sim_topk_quantized" -> (topkQuantized _),
-    "sim_topk_cosine"    -> (topkCosine _),
-    "sim_range_search"   -> (rangeSearch _),
-    "sim_ann_lsh"        -> (annLsh _),
-    "sim_ann_bucketed"   -> (annBucketed _),
-    "sim_ivf_label"      -> (ivfLabel _)
-  )
-
-  // a def, not a val: sim_pca_recall's oracle is GENERATED when the
-  // query runs (driver-eigen literals), so the map must be re-read at
-  // dump time — Verify writes oracle_sql.json after all queries finish
-  def oracleSql: Map[String, String] = Map(
-    "sim_mmr_select"     -> mmrSelectSql,
-    "sim_label_knn_acc"  -> labelKnnAccSql,
-    "sim_rrf_fusion"     -> rrfFusionSql,
-    "sim_rrf_recall"     -> rrfRecallSql,
-    "sim_inertia"        -> inertiaSql,
-    "sim_batch_ivf"      -> batchIvfSql,
-    "sim_ivf_sweep"      -> ivfSweepSql,
-    "sim_ivf_persist"    -> ivfPersistSql,
-    "sim_ivf_delta"      -> ivfDeltaSql,
-    "sim_hard_negatives" -> hardNegativesSql,
-    "sim_mips_norm"      -> mipsNormSql,
-    "sim_pq_topk"        -> pqTopkSql,
-    "sim_pq_recall"      -> pqRecallSql,
-    "sim_ivfpq_recall"   -> ivfpqRecallSql,
-    "sim_quantize_audit" -> quantizeAuditSql,
-    "sim_dim_variance"   -> dimVarianceSql,
-    "sim_prune_recall"   -> pruneRecallSql,
-    "sim_pca_recall"     -> pcaOracleSqlRef.get(),
-    "sim_mrl_recall"     -> mrlRecallSql,
-    "sim_rp_recall"      -> rpRecallSql,
-    "sim_bucket_drift"   -> bucketDriftSql,
-    "sim_knn_batch"      -> knnBatchSql,
-    "sim_silhouette"     -> silhouetteSql,
-    "sim_pair_hist"      -> pairHistSql,
-    "sim_kmeans_assign"  -> kmeansAssignSql,
-    "sim_ann_recall"     -> annRecallSql,
-    "sim_topk_quantized" -> topkQuantizedSql,
-    "sim_topk_cosine"    -> topkCosineSql,
-    "sim_range_search"   -> rangeSearchSql,
-    "sim_ann_lsh"        -> annLshSql,
-    "sim_ann_bucketed"   -> annBucketedSql,
-    "sim_ivf_label"      -> ivfLabelSql
+  val gates: Seq[Gate] = Seq(
+    Gate("sim_mmr_select", mmrSelect, mmrSelectSql),
+    Gate("sim_label_knn_acc", labelKnnAcc, labelKnnAccSql),
+    Gate("sim_rrf_fusion", rrfFusion, rrfFusionSql),
+    Gate("sim_rrf_recall", rrfRecall, rrfRecallSql),
+    Gate("sim_inertia", inertia, inertiaSql),
+    Gate("sim_dim_variance", dimVariance, dimVarianceSql),
+    Gate("sim_prune_recall", pruneRecall, pruneRecallSql),
+    // generated by the query's own run, so read late (see Gate)
+    Gate("sim_pca_recall", pcaRecall, pcaOracleSqlRef.get()),
+    Gate("sim_mrl_recall", mrlRecall, mrlRecallSql),
+    Gate("sim_rp_recall", rpRecall, rpRecallSql),
+    Gate("sim_bucket_drift", bucketDrift, bucketDriftSql),
+    Gate("sim_batch_ivf", batchIvf, batchIvfSql),
+    Gate("sim_ivf_sweep", ivfSweep, ivfSweepSql),
+    Gate("sim_ivf_persist", ivfPersist, ivfPersistSql),
+    Gate("sim_ivf_delta", ivfDelta, ivfDeltaSql),
+    Gate("sim_hard_negatives", hardNegatives, hardNegativesSql),
+    Gate("sim_mips_norm", mipsNorm, mipsNormSql),
+    Gate("sim_pq_topk", pqTopk, pqTopkSql),
+    Gate("sim_pq_recall", pqRecall, pqRecallSql),
+    Gate("sim_ivfpq_recall", ivfpqRecall, ivfpqRecallSql),
+    Gate("sim_quantize_audit", quantizeAudit, quantizeAuditSql),
+    Gate("sim_knn_batch", knnBatch, knnBatchSql),
+    Gate("sim_silhouette", silhouette, silhouetteSql),
+    Gate("sim_pair_hist", pairHist, pairHistSql),
+    Gate("sim_kmeans_assign", kmeansAssigned, kmeansAssignSql),
+    Gate("sim_ann_recall", annRecall, annRecallSql),
+    Gate("sim_topk_quantized", topkQuantized, topkQuantizedSql),
+    Gate("sim_topk_cosine", topkCosine, topkCosineSql),
+    Gate("sim_range_search", rangeSearch, rangeSearchSql),
+    Gate("sim_ann_lsh", annLsh, annLshSql),
+    Gate("sim_ann_bucketed", annBucketed, annBucketedSql),
+    Gate("sim_ivf_label", ivfLabel, ivfLabelSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.GraftFunctions
 import graft.polarify.Corpus
+import graft.Gate
 
 /** The SQL front door: a compiled polarify program registered in the
   * session FunctionRegistry and invoked from `spark.sql` text — the
@@ -515,49 +516,29 @@ object SqlSurface {
       |GROUP BY ROLLUP (o.o_orderstatus, o.o_orderpriority)
       |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sq_mv_snow_sql"       -> (mvSnowViaSql _),
-    "sq_mv_sets_sql"       -> (mvSetsViaSql _),
-    "sq_dsv2_sql"          -> (dsv2ViaSql _),
-    "sq_mv_minmax_sql"     -> (mvMinMaxViaSql _),
-    "sq_mv_attr_sql"       -> (mvAttrViaSql _),
-    "sq_mv_serve_sql"      -> (mvServeViaSql _),
-    "sq_except_sql"        -> (exceptViaSql _),
-    "sq_rollup_sql"        -> (rollupViaSql _),
-    "sq_range_frame_sql"   -> (rangeFrameViaSql _),
-    "sq_pivot_sql"         -> (pivotViaSql _),
-    "sq_exists_semi"       -> (existsSemiViaSql _),
-    "sq_signum_sql"        -> (signumViaSql _),
-    "sq_ship_priority_sql" -> (shipPriorityViaSql _),
-    "sq_corr_brand_max"    -> (brandMaxViaSql _),
-    "sq_lateral_topk"      -> (lateralTopkViaSql _),
-    "sq_recursive_reach"   -> (recursiveReachViaSql _),
-    "sq_window_suite_sql"  -> (windowSuiteViaSql _),
-    "sq_unpivot_sql"       -> (unpivotViaSql _))
-
-  val oracleSql: Map[String, String] = Map(
-    "sq_mv_snow_sql"       -> mvSnowOracle,
-    "sq_mv_sets_sql"       -> mvSetsOracle,
-    // the DataFrame twins' oracles, verbatim — one definition, two surfaces
-    "sq_dsv2_sql"          -> Dsv2Source.oracleSql("ax_dsv2_pushdown"),
-    "sq_mv_minmax_sql"     -> MatViews.oracleSql("ax_mv_minmax"),
-    "sq_mv_attr_sql"       -> mvAttrOracle,
-    // the DataFrame twin's oracle, verbatim — one definition, two surfaces
-    "sq_mv_serve_sql"      -> MatViews.oracleSql("ax_mv_rewrite"),
-    "sq_except_sql"        -> exceptOracle,
-    // the DataFrame twins' oracles, verbatim — one definition, two surfaces
-    "sq_rollup_sql"        -> Analytics.oracleSql("ax_rollup_lineitem"),
-    "sq_range_frame_sql"   -> Analytics.oracleSql("ax_trailing_revenue"),
-    "sq_pivot_sql"         -> pivotOracle,
-    "sq_exists_semi"       -> existsSemiTemplate("customer", "orders"),
-    "sq_signum_sql"        -> signumViaSqlOracle,
-    // the DataFrame twin's oracle, verbatim — one definition, two surfaces
-    "sq_ship_priority_sql" -> Analytics.oracleSql("ax_ship_priority"),
-    "sq_corr_brand_max"    -> brandMaxOracle,
+  // a twin of a DataFrame gate reuses that gate's oracle verbatim: one
+  // definition, two surfaces
+  val gates: Seq[Gate] = Seq(
+    Gate("sq_mv_snow_sql", mvSnowViaSql, mvSnowOracle),
+    Gate("sq_mv_sets_sql", mvSetsViaSql, mvSetsOracle),
+    Gate("sq_dsv2_sql", dsv2ViaSql, Dsv2Source.dsv2PushdownSql),
+    Gate("sq_mv_minmax_sql", mvMinMaxViaSql, MatViews.mvMinMaxSql),
+    Gate("sq_mv_attr_sql", mvAttrViaSql, mvAttrOracle),
+    Gate("sq_mv_serve_sql", mvServeViaSql, MatViews.mvRewriteSql),
+    Gate("sq_except_sql", exceptViaSql, exceptOracle),
+    Gate("sq_rollup_sql", rollupViaSql, Analytics.rollupLineitemSql),
+    Gate("sq_range_frame_sql", rangeFrameViaSql, Analytics.trailingRevenueSql),
+    Gate("sq_pivot_sql", pivotViaSql, pivotOracle),
+    Gate("sq_exists_semi", existsSemiViaSql,
+      existsSemiTemplate("customer", "orders")),
+    Gate("sq_signum_sql", signumViaSql, signumViaSqlOracle),
+    Gate("sq_ship_priority_sql", shipPriorityViaSql, Analytics.shipPrioritySql),
+    Gate("sq_corr_brand_max", brandMaxViaSql, brandMaxOracle),
     // literally the same text the Spark surface runs, on the raw tables
-    "sq_lateral_topk"      -> lateralTemplate("part"),
-    "sq_recursive_reach"   -> recursiveTemplate("orders"),
-    // the DataFrame twins' oracles, verbatim — one definition, two surfaces
-    "sq_window_suite_sql"  -> Analytics.oracleSql("ax_window_suite"),
-    "sq_unpivot_sql"       -> Reshape.oracleSql("ax_unpivot_metrics"))
+    Gate("sq_lateral_topk", lateralTopkViaSql, lateralTemplate("part")),
+    Gate("sq_recursive_reach", recursiveReachViaSql,
+      recursiveTemplate("orders")),
+    Gate("sq_window_suite_sql", windowSuiteViaSql, Analytics.windowSuiteSql),
+    Gate("sq_unpivot_sql", unpivotViaSql, Reshape.unpivotMetricsSql)
+  )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Distribution / order-statistics operators: group-wise argmax, fixed
   * width histograms, exact correlation building blocks, and the Pareto
@@ -1320,28 +1321,29 @@ object Stats {
       |FROM h JOIN th USING (event_type)
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_sample_error"    -> (sampleError _),
-    "ax_discount_elasticity" -> (discountElasticity _),
-    "ax_diff_in_diff"    -> (diffInDiff _),
-    "ax_winsor_mean"     -> (winsorMean _),
-    "ax_group_percentile" -> (groupPercentile _),
-    "ax_join_size_est"   -> (joinSizeEst _),
-    "ax_exact_percentile" -> (exactPercentile _),
-    "ax_poisson_boot"    -> (poissonBoot _),
-    "ax_srm_check"       -> (srmCheck _),
-    "ax_cuped"           -> (cuped _),
-    "ax_ab_conversion"   -> (abConversion _),
-    "ax_cms_freq"        -> (cmsFreq _),
-    "ax_month_end_balance" -> (monthEndBalance _),
-    "ax_copurchase"      -> (copurchase _),
-    "ax_argmax_customer" -> (argmaxCustomer _),
-    "ax_histogram"       -> (histogram _),
-    "ax_corr_sums"       -> (corrSums _),
-    "ax_decimal_sum"     -> (decimalSum _),
-    "ax_anomaly_mad"     -> (anomalyMad _),
-    "ax_target_encode"   -> (targetEncode _),
-    "ax_skyline_parts"   -> (skylineParts _))
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_sample_error", sampleError, sampleErrorSql),
+    Gate("ax_discount_elasticity", discountElasticity, discountElasticitySql),
+    Gate("ax_diff_in_diff", diffInDiff, diffInDiffSql),
+    Gate("ax_winsor_mean", winsorMean, winsorMeanSql),
+    Gate("ax_group_percentile", groupPercentile, groupPercentileSql),
+    Gate("ax_join_size_est", joinSizeEst, joinSizeEstSql),
+    Gate("ax_exact_percentile", exactPercentile, exactPercentileSql),
+    Gate("ax_poisson_boot", poissonBoot, poissonBootSql),
+    Gate("ax_srm_check", srmCheck, srmCheckSql),
+    Gate("ax_cuped", cuped, cupedSql),
+    Gate("ax_ab_conversion", abConversion, abConversionSql),
+    Gate("ax_cms_freq", cmsFreq, cmsFreqSql),
+    Gate("ax_month_end_balance", monthEndBalance, monthEndBalanceSql),
+    Gate("ax_copurchase", copurchase, copurchaseSql),
+    Gate("ax_argmax_customer", argmaxCustomer, argmaxCustomerSql),
+    Gate("ax_histogram", histogram, histogramSql),
+    Gate("ax_corr_sums", corrSums, corrSumsSql),
+    Gate("ax_decimal_sum", decimalSum, decimalSumSql),
+    Gate("ax_anomaly_mad", anomalyMad, anomalyMadSql),
+    Gate("ax_target_encode", targetEncode, targetEncodeSql),
+    Gate("ax_skyline_parts", skylineParts, skylinePartsSql)
+  )
 
   // -------------------------------------------------------------------
   // ax_anomaly_mad: robust anomaly detection on the event stream —
@@ -1471,26 +1473,4 @@ object Stats {
       |    AS enc_milli
       |FROM cat, pr ORDER BY brand""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "ax_sample_error"    -> sampleErrorSql,
-    "ax_discount_elasticity" -> discountElasticitySql,
-    "ax_diff_in_diff"    -> diffInDiffSql,
-    "ax_winsor_mean"     -> winsorMeanSql,
-    "ax_group_percentile" -> groupPercentileSql,
-    "ax_join_size_est"   -> joinSizeEstSql,
-    "ax_exact_percentile" -> exactPercentileSql,
-    "ax_poisson_boot"    -> poissonBootSql,
-    "ax_srm_check"       -> srmCheckSql,
-    "ax_cuped"           -> cupedSql,
-    "ax_ab_conversion"   -> abConversionSql,
-    "ax_cms_freq"        -> cmsFreqSql,
-    "ax_month_end_balance" -> monthEndBalanceSql,
-    "ax_copurchase"      -> copurchaseSql,
-    "ax_argmax_customer" -> argmaxCustomerSql,
-    "ax_histogram"       -> histogramSql,
-    "ax_corr_sums"       -> corrSumsSql,
-    "ax_decimal_sum"     -> decimalSumSql,
-    "ax_anomaly_mad"     -> anomalyMadSql,
-    "ax_target_encode"   -> targetEncodeSql,
-    "ax_skyline_parts"   -> skylinePartsSql)
 }

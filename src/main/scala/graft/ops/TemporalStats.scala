@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Exact-integer temporal statistics: time-weighted averages over the
   * event stream and latency percentiles from bounded-support
@@ -168,7 +169,7 @@ object TemporalStats {
       .orderBy("day")
   }
 
-  private val newReturningSql =
+  private[ops] val newReturningSql =
     """WITH ud AS (SELECT DISTINCT user_id,
       |    strftime(ts, '%Y-%m-%d') AS day FROM events),
       |f AS (SELECT user_id, MIN(day) AS first_day FROM ud GROUP BY 1)
@@ -657,29 +658,17 @@ object TemporalStats {
       |  MAX(days) AS max_gap
       |FROM c GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_weekend_lift"      -> (weekendLift _),
-    "ax_order_gap_stats"   -> (orderGapStats _),
-    "ax_changepoint"       -> (changepoint _),
-    "ax_runs_test"         -> (runsTest _),
-    "ax_trend_fit"         -> (trendFit _),
-    "ax_backtest_naive"    -> (backtestNaive _),
-    "ax_wow_growth"        -> (wowGrowth _),
-    "ax_twap"              -> (twap _),
-    "ax_latency_histogram" -> (latencyHistogram _),
-    "ax_new_returning"     -> (newReturning _),
-    "ax_dow_hour_heat"     -> (dowHourHeat _))
-
-  def oracleSql: Map[String, String] = Map(
-    "ax_weekend_lift"      -> weekendLiftSql,
-    "ax_order_gap_stats"   -> orderGapStatsSql,
-    "ax_changepoint"       -> changepointSql,
-    "ax_runs_test"         -> runsTestSql,
-    "ax_trend_fit"         -> trendFitSql,
-    "ax_backtest_naive"    -> backtestNaiveSql,
-    "ax_wow_growth"        -> wowGrowthSql,
-    "ax_twap"              -> twapSql,
-    "ax_latency_histogram" -> latencyHistogramSql,
-    "ax_new_returning"     -> newReturningSql,
-    "ax_dow_hour_heat"     -> dowHourHeatSql)
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_weekend_lift", weekendLift, weekendLiftSql),
+    Gate("ax_order_gap_stats", orderGapStats, orderGapStatsSql),
+    Gate("ax_changepoint", changepoint, changepointSql),
+    Gate("ax_runs_test", runsTest, runsTestSql),
+    Gate("ax_trend_fit", trendFit, trendFitSql),
+    Gate("ax_backtest_naive", backtestNaive, backtestNaiveSql),
+    Gate("ax_wow_growth", wowGrowth, wowGrowthSql),
+    Gate("ax_twap", twap, twapSql),
+    Gate("ax_latency_histogram", latencyHistogram, latencyHistogramSql),
+    Gate("ax_new_returning", newReturning, newReturningSql),
+    Gate("ax_dow_hour_heat", dowHourHeat, dowHourHeatSql)
+  )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Text-analysis operators for training-data pipelines: statistics,
   * quality scoring, language ID, token counting, fingerprinting.
@@ -1531,69 +1532,36 @@ object TextAnalysis {
       |      FROM head)
       |ORDER BY rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_zipf_check" -> (zipfCheck _),
-    "tx_length_buckets" -> (lengthBuckets _),
-    "tx_hash_embed"    -> (hashEmbed _),
-    "tx_quality_logit" -> (qualityLogit _),
-    "tx_bpe_train"    -> (bpeTrain _),
-    "tx_bpe_encode"   -> (bpeEncode _),
-    "tx_mixture_sample" -> (mixtureSample _),
-    "tx_mixture_temperature" -> (mixtureTemperature _),
-    "tx_mixture_epochs" -> (mixtureEpochs _),
-    "tx_approx_topk"  -> (approxTopk _),
-    "tx_bm25"         -> (bm25 _),
-    "tx_inverted_index" -> (invertedIndex _),
-    "tx_repetition"   -> (repetition _),
-    "tx_quality_sample" -> (qualitySample _),
-    "tx_vocab_growth" -> (vocabGrowth _),
-    "tx_bigrams"      -> (bigrams _),
-    "tx_bigram_surprisal" -> (bigramSurprisal _),
-    "tx_feature_hash" -> (featureHash _),
-    "tx_sample_stratified" -> (sampleStratified _),
-    "tx_keywords"     -> (keywords _),
-    "tx_split_assign" -> (splitAssign _),
-    "tx_top_terms"   -> (topTerms _),
-    "tx_stats"       -> (stats _),
-    "tx_langid"      -> (langid _),
-    "tx_langid_confusion" -> (langidConfusion _),
-    "tx_quality"     -> (quality _),
-    "tx_fingerprint" -> (fingerprint _),
-    "tx_token_bpe"   -> (tokenBpe _),
-    "tx_rolling_fp"  -> (rollingFp _),
-    "tx_winnow_fp"   -> (winnowFp _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "tx_zipf_check" -> zipfCheckSql,
-    "tx_length_buckets" -> lengthBucketsSql,
-    "tx_hash_embed"    -> hashEmbedSql,
-    "tx_quality_logit" -> qualityLogitSql,
-    "tx_bpe_train"    -> bpeTrainSql,
-    "tx_bpe_encode"   -> bpeEncodeSql,
-    "tx_mixture_sample" -> mixtureSampleSql,
-    "tx_mixture_temperature" -> mixtureTemperatureSql,
-    "tx_mixture_epochs" -> mixtureEpochsSql,
-    "tx_approx_topk"  -> approxTopkSql,
-    "tx_bm25"         -> bm25Sql,
-    "tx_inverted_index" -> invertedIndexSql,
-    "tx_repetition"   -> repetitionSql,
-    "tx_quality_sample" -> qualitySampleSql,
-    "tx_vocab_growth" -> vocabGrowthSql,
-    "tx_bigrams"      -> bigramsSql,
-    "tx_bigram_surprisal" -> bigramSurprisalSql,
-    "tx_feature_hash" -> featureHashSql,
-    "tx_sample_stratified" -> sampleStratifiedSql,
-    "tx_keywords"     -> keywordsSql,
-    "tx_split_assign" -> splitAssignSql,
-    "tx_top_terms"   -> topTermsSql,
-    "tx_stats"       -> statsSql,
-    "tx_langid"      -> langidSql,
-    "tx_langid_confusion" -> langidConfusionSql,
-    "tx_quality"     -> qualitySql,
-    "tx_fingerprint" -> fingerprintSql,
-    "tx_token_bpe"   -> tokenBpeSql,
-    "tx_rolling_fp"  -> rollingFpSql,
-    "tx_winnow_fp"   -> winnowFpSql
+  val gates: Seq[Gate] = Seq(
+    Gate("tx_zipf_check", zipfCheck, zipfCheckSql),
+    Gate("tx_length_buckets", lengthBuckets, lengthBucketsSql),
+    Gate("tx_hash_embed", hashEmbed, hashEmbedSql),
+    Gate("tx_quality_logit", qualityLogit, qualityLogitSql),
+    Gate("tx_bpe_train", bpeTrain, bpeTrainSql),
+    Gate("tx_bpe_encode", bpeEncode, bpeEncodeSql),
+    Gate("tx_mixture_sample", mixtureSample, mixtureSampleSql),
+    Gate("tx_mixture_temperature", mixtureTemperature, mixtureTemperatureSql),
+    Gate("tx_mixture_epochs", mixtureEpochs, mixtureEpochsSql),
+    Gate("tx_approx_topk", approxTopk, approxTopkSql),
+    Gate("tx_bm25", bm25, bm25Sql),
+    Gate("tx_inverted_index", invertedIndex, invertedIndexSql),
+    Gate("tx_repetition", repetition, repetitionSql),
+    Gate("tx_quality_sample", qualitySample, qualitySampleSql),
+    Gate("tx_vocab_growth", vocabGrowth, vocabGrowthSql),
+    Gate("tx_bigrams", bigrams, bigramsSql),
+    Gate("tx_bigram_surprisal", bigramSurprisal, bigramSurprisalSql),
+    Gate("tx_feature_hash", featureHash, featureHashSql),
+    Gate("tx_sample_stratified", sampleStratified, sampleStratifiedSql),
+    Gate("tx_keywords", keywords, keywordsSql),
+    Gate("tx_split_assign", splitAssign, splitAssignSql),
+    Gate("tx_top_terms", topTerms, topTermsSql),
+    Gate("tx_stats", stats, statsSql),
+    Gate("tx_langid", langid, langidSql),
+    Gate("tx_langid_confusion", langidConfusion, langidConfusionSql),
+    Gate("tx_quality", quality, qualitySql),
+    Gate("tx_fingerprint", fingerprint, fingerprintSql),
+    Gate("tx_token_bpe", tokenBpe, tokenBpeSql),
+    Gate("tx_rolling_fp", rollingFp, rollingFpSql),
+    Gate("tx_winnow_fp", winnowFp, winnowFpSql)
   )
 }

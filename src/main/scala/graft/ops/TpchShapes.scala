@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Round-7 TPC-H query-shape sweep — the eight classic plan shapes not
   * yet in the gate (Q2, Q8, Q12, Q14, Q15, Q16, Q18, Q19), each written
@@ -402,25 +403,14 @@ object TpchShapes {
       |FROM pairs GROUP BY 1, 2
       |ORDER BY supplier_cnt DESC, p_brand ASC, size_bucket ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_promo_share"       -> (promoShare _),
-    "ax_big_orders"        -> (bigOrders _),
-    "ax_shipmode_priority" -> (shipmodePriority _),
-    "ax_min_cost_supp"     -> (minCostSupp _),
-    "ax_disjunct_pred"     -> (disjunctPred _),
-    "ax_market_share"      -> (marketShare _),
-    "ax_top_supplier"      -> (topSupplier _),
-    "ax_parts_supp_dist"   -> (partsSuppDist _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_promo_share"       -> promoShareSql,
-    "ax_big_orders"        -> bigOrdersSql,
-    "ax_shipmode_priority" -> shipmodePrioritySql,
-    "ax_min_cost_supp"     -> minCostSuppSql,
-    "ax_disjunct_pred"     -> disjunctPredSql,
-    "ax_market_share"      -> marketShareSql,
-    "ax_top_supplier"      -> topSupplierSql,
-    "ax_parts_supp_dist"   -> partsSuppDistSql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_promo_share", promoShare, promoShareSql),
+    Gate("ax_big_orders", bigOrders, bigOrdersSql),
+    Gate("ax_shipmode_priority", shipmodePriority, shipmodePrioritySql),
+    Gate("ax_min_cost_supp", minCostSupp, minCostSuppSql),
+    Gate("ax_disjunct_pred", disjunctPred, disjunctPredSql),
+    Gate("ax_market_share", marketShare, marketShareSql),
+    Gate("ax_top_supplier", topSupplier, topSupplierSql),
+    Gate("ax_parts_supp_dist", partsSuppDist, partsSuppDistSql)
   )
 }

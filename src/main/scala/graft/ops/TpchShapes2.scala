@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 
 /** Round-11 completion of the TPC-H plan-shape sweep — the six classic
   * shapes the gate did not yet carry (Q4, Q6, Q7, Q9, Q10, Q11), each
@@ -310,21 +311,12 @@ object TpchShapes2 {
        |WHERE value_cents > 2 * (nation_total_cents // nation_part_cnt)
        |ORDER BY n_name ASC, value_cents DESC, l_partkey ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ax_order_priority"  -> (orderPriority _),
-    "ax_forecast_delta"  -> (forecastDelta _),
-    "ax_volume_shipping" -> (volumeShipping _),
-    "ax_product_profit"  -> (productProfit _),
-    "ax_returned_items"  -> (returnedItems _),
-    "ax_important_stock" -> (importantStock _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "ax_order_priority"  -> orderPrioritySql,
-    "ax_forecast_delta"  -> forecastDeltaSql,
-    "ax_volume_shipping" -> volumeShippingSql,
-    "ax_product_profit"  -> productProfitSql,
-    "ax_returned_items"  -> returnedItemsSql,
-    "ax_important_stock" -> importantStockSql
+  val gates: Seq[Gate] = Seq(
+    Gate("ax_order_priority", orderPriority, orderPrioritySql),
+    Gate("ax_forecast_delta", forecastDelta, forecastDeltaSql),
+    Gate("ax_volume_shipping", volumeShipping, volumeShippingSql),
+    Gate("ax_product_profit", productProfit, productProfitSql),
+    Gate("ax_returned_items", returnedItems, returnedItemsSql),
+    Gate("ax_important_stock", importantStock, importantStockSql)
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for ABC classification and the new-vs-returning
@@ -11,7 +11,7 @@ class AbcActivitySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("ax_abc_class matches the in-memory cumulative-share classification") {
     val spend = spark.read.parquet(s"$dir/lineitem.parquet")

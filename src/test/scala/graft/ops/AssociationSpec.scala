@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent in-memory reference implementations for the association
@@ -14,7 +14,7 @@ class AssociationSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   /** Distinct (order, part) incidence read once for all references. */
   private lazy val incidence: Seq[(Long, Long)] =

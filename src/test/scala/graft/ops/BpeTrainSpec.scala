@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Direct unit pins of tx_bpe_train's merge semantics on a synthetic
@@ -20,7 +20,7 @@ class BpeTrainSpec extends AnyFunSuite {
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Extensions.queries("tx_bpe_train")(spark, dir)
+    SparkEntry.queries("tx_bpe_train")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -18,7 +18,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("bucketing changes the plan, never the result") {
-    val bucketed = Bucketing.queries("ax_bucketed_join")(spark, dir)
+    val bucketed = SparkEntry.queries("ax_bucketed_join")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val plain = spark.read.parquet(s"$dir/lineitem.parquet")
       .join(spark.read.parquet(s"$dir/orders.parquet"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the series-diagnostics trio — CUSUM
@@ -12,7 +12,7 @@ class ChangepointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   /** (type → day-ordered daily counts with epoch-day keys) */
   private lazy val daily: Map[String, Seq[(Long, Long)]] =

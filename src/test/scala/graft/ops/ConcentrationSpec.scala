@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the revenue-concentration pair (Gini
@@ -11,7 +11,7 @@ class ConcentrationSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   /** Per-customer whole-dollar spend, ascending by (spend, custkey). */
   private lazy val sortedSpend: Seq[(Long, Long)] =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,14 +43,14 @@ class DecorrelationSpec extends AnyFunSuite {
         |                    AND datediff(l3.l_shipdate, o.o_orderdate) > 90)
         |GROUP BY s.s_name""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-    val ours = Extensions.queries("ax_late_suppliers")(spark, dir)
+    val ours = SparkEntry.queries("ax_late_suppliers")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted
     assert(ours.nonEmpty, "fixture must produce at least one blamed supplier")
     assert(ours.toSeq == textbook.toSeq)
   }
 
   test("tx_para_dedup keeps each distinct paragraph exactly once") {
-    val out = Extensions.queries("tx_para_dedup")(spark, dir).persist()
+    val out = SparkEntry.queries("tx_para_dedup")(spark, dir).persist()
     try {
       val (paras, kept) = {
         val r = out.agg(sum("n_paras"), sum("n_kept")).collect()(0)
@@ -72,7 +72,7 @@ class DecorrelationSpec extends AnyFunSuite {
   }
 
   test("tx_para_dedup rewrite is the identity on documents with no dups") {
-    val out = Extensions.queries("tx_para_dedup")(spark, dir)
+    val out = SparkEntry.queries("tx_para_dedup")(spark, dir)
     val intact = out.filter(col("n_kept") === col("n_paras"))
       .select(col("doc_id"), col("clean_hash"))
     // word-aligned chunks joined back with single spaces reproduce the
@@ -107,7 +107,7 @@ class DecorrelationSpec extends AnyFunSuite {
         |                              AND l2.l_partkey = l.l_partkey)
         |GROUP BY 1""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
-    val ours = Extensions.queries("ax_small_quantity")(spark, dir)
+    val ours = SparkEntry.queries("ax_small_quantity")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
     assert(ours.nonEmpty, "fixture must produce small-quantity revenue")
     assert(ours.toSeq == textbook.toSeq)
@@ -133,7 +133,7 @@ class DecorrelationSpec extends AnyFunSuite {
         |                    AND o.o_orderdate >= TIMESTAMP '1999-01-01')
         |GROUP BY 1""".stripMargin)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted
-    val ours = Extensions.queries("ax_idle_customers")(spark, dir)
+    val ours = SparkEntry.queries("ax_idle_customers")(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted
     assert(ours.nonEmpty, "fixture must contain lapsed above-average customers")
     // NOTE the textbook AVG is a double and ours is the exact-integer
@@ -143,7 +143,7 @@ class DecorrelationSpec extends AnyFunSuite {
   }
 
   test("ax_ewma_smooth matches the driver-side truncated recurrence") {
-    val out = Extensions.queries("ax_ewma_smooth")(spark, dir)
+    val out = SparkEntry.queries("ax_ewma_smooth")(spark, dir)
       .collect()
       .map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4))))
@@ -201,7 +201,7 @@ class DecorrelationSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sorted
-    val ours = Extensions.queries("ax_min_cost_supp")(spark, dir)
+    val ours = SparkEntry.queries("ax_min_cost_supp")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sorted

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the mixture-drift audits (pairwise source
@@ -11,7 +11,7 @@ class DriftAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   private lazy val docRows: Seq[(String, String, String)] =
     spark.read.parquet(s"$dir/documents.parquet")

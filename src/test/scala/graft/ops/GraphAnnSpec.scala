@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** NN-descent invariants on real sf0.001 data, independent of the
@@ -18,7 +18,7 @@ class GraphAnnSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val rows =
-    Extensions.queries("sim_nnd_round")(spark, dir).collect()
+    SparkEntry.queries("sim_nnd_round")(spark, dir).collect()
 
   test("per-probe recall is monotone across the round") {
     assert(rows.nonEmpty)
@@ -44,7 +44,7 @@ class GraphAnnSpec extends AnyFunSuite {
   }
 
   test("the convergence curve is monotone and round 1 matches nnd_round") {
-    val curve = Extensions.queries("sim_nnd_converge")(spark, dir)
+    val curve = SparkEntry.queries("sim_nnd_converge")(spark, dir)
       .collect().sortBy(_.getLong(0))
     assert(curve.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
     val recalls = curve.map(_.getLong(3))
@@ -58,7 +58,7 @@ class GraphAnnSpec extends AnyFunSuite {
   }
 
   test("only the probe-panel broadcast is a non-keyed join") {
-    val p = Extensions.queries("sim_nnd_round")(spark, dir)
+    val p = SparkEntry.queries("sim_nnd_round")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"a non-broadcast cartesian appeared:\n$p")

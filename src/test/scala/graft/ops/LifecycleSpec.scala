@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,7 +119,7 @@ class LifecycleSpec extends AnyFunSuite {
   }
 
   test("ax_occ_commits: the validation law holds on every emitted pair") {
-    val rows = Extensions.queries("ax_occ_commits")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_occ_commits")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4), r.getString(5), r.getString(6)))
     assert(rows.length == 10, "5 prospective commits -> 10 pairs")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,7 +99,7 @@ class LineageSpec extends AnyFunSuite {
     }
 
   test("serving from an MV does not change provenance (the invariant)") {
-    val served = Extensions.queries("ax_mv_star")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_star")(spark, dir)
     // the plan that executes reads the rollup fixture, not the bases
     assert(leafPaths(served).exists(_.contains("mv_star")),
       "precondition: the gate query must actually be MV-served")
@@ -127,7 +127,7 @@ class LineageSpec extends AnyFunSuite {
       assert(viaMv.forall { case (_, t, _) =>
         t == "lineitem" || t == "orders" },
         s"served lineage must reach base tables only: $viaMv")
-    } finally Extensions.queries("ax_mv_rewrite")(spark, dir)
+    } finally SparkEntry.queries("ax_mv_rewrite")(spark, dir)
   }
 
   test("ofServed resolves a DSv2 scan leaf in the optimized plan") {
@@ -152,8 +152,8 @@ class LineageSpec extends AnyFunSuite {
     // MvDef.measureInputs; mvColumnOrigins must read exactly those — a
     // def registered WITHOUT them yields empty measure origins (there
     // is no hash-recovery fallback anymore)
-    Extensions.queries("ax_mv_star")(spark, dir).collect()
-    val mvKey = leafPaths(Extensions.queries("ax_mv_star")(spark, dir))
+    SparkEntry.queries("ax_mv_star")(spark, dir).collect()
+    val mvKey = leafPaths(SparkEntry.queries("ax_mv_star")(spark, dir))
       .find(_.contains("mv_star"))
     assert(mvKey.isDefined)
     val origins = graft.plans.MvRewrite.mvColumnOrigins(spark, mvKey.get)
@@ -167,7 +167,7 @@ class LineageSpec extends AnyFunSuite {
   test("without origin composition the executed plan cites the fixture") {
     // the negative that motivates ofServed: a naive walk of what ran
     // stops at the rollup — exactly what a dataset card must not record
-    val served = Extensions.queries("ax_mv_star")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_star")(spark, dir)
     val naiveLeaves = leafPaths(served)
     assert(naiveLeaves.exists(_.contains("mv_star")),
       "precondition: the executed plan's leaf is the fixture")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +52,7 @@ class MatViewsCdcSpec extends AnyFunSuite {
   }
 
   test("the upkeep answer equals a direct Spark recompute") {
-    val served = Extensions.queries("ax_mv_cdc")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_cdc")(spark, dir)
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     val deleted = MatViews.cdcLog(base).filter(col("op") === "D")
       .select(col("k")).distinct()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the sequence-mining top-10 (ax_event_motifs)
@@ -12,7 +12,7 @@ class MotifMrlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("ax_event_motifs matches the in-memory trigram count") {
     val rows = spark.read.parquet(s"$dir/events.parquet")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form invariants for the visual/audio quality audits. The
@@ -16,7 +16,7 @@ class MultimodalAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("mm_grad_energy: every gradient is 7 or a 249 wrap (exact identity)") {
     val rows = q("mm_grad_energy").collect().map(r =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the robust/causal batch — grouped OLS
@@ -12,7 +12,7 @@ class RobustCausalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("ax_discount_elasticity matches the in-memory normal equations") {
     val brand = spark.read.parquet(s"$dir/part.parquet")

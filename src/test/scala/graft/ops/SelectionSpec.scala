@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants of the data-selection operators, on real
@@ -13,7 +13,7 @@ class SelectionSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("dsir importance weights rank the target language to the top") {
-    val rows = Extensions.queries("tx_dsir_weights")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_dsir_weights")(spark, dir).collect()
     assert(rows.nonEmpty)
     // bounded sigmoid-ratio scores: per-doc mean is within [0, 1e6]
     rows.foreach { r =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +18,7 @@ class SemDedupSpec extends AnyFunSuite {
     "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
 
   test("semdedup prunes high-cosine followers and keeps an independent set") {
-    val pruned = Extensions.queries("dd_semdedup")(spark, dir).collect()
+    val pruned = SparkEntry.queries("dd_semdedup")(spark, dir).collect()
     assert(pruned.nonEmpty, "gate data must exercise the prune")
 
     // every pruned row points at a smaller-id representative above gate
@@ -44,7 +44,7 @@ class SemDedupSpec extends AnyFunSuite {
       assert(!repOf.contains(cur), s"chain from ${r.getLong(0)} ended pruned")
     }
 
-    val asg = Extensions.queries("sim_kmeans_assign")(spark, dir)
+    val asg = SparkEntry.queries("sim_kmeans_assign")(spark, dir)
       .select(col("vec_id"), col("cluster"))
     val byId = asg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // representative and pruned member share a cluster
@@ -79,11 +79,11 @@ class SemDedupSpec extends AnyFunSuite {
   }
 
   test("semdedup_rep chain-resolves every pruned row to a KEPT exemplar") {
-    val pruned = Extensions.queries("dd_semdedup")(spark, dir).collect()
+    val pruned = SparkEntry.queries("dd_semdedup")(spark, dir).collect()
     val prunedIds = pruned.map(_.getLong(0)).toSet
     val repOf = pruned.map(r => r.getLong(0) -> r.getLong(2)).toMap
 
-    val res = Extensions.queries("dd_semdedup_rep")(spark, dir).collect()
+    val res = SparkEntry.queries("dd_semdedup_rep")(spark, dir).collect()
     assert(res.length == pruned.length,
       "resolution must cover exactly the pruned set")
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ class SemanticsSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("funnel stages are monotone non-increasing") {
-    val r = Extensions.queries("ax_funnel_stages")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("ax_funnel_stages")(spark, dir).collect()(0)
     val (users, view, click, purchase) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     assert(users >= view && view >= click && click >= purchase)
@@ -23,7 +23,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("retention offset-0 actives equal the cohort's size") {
-    val rows = Extensions.queries("ax_retention_cohorts")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_retention_cohorts")(spark, dir).collect()
     val byCohort = rows.groupBy(_.getString(0))
     // every user is active on their own first day, and no offset can
     // have more actives than day 0 of the same cohort
@@ -35,7 +35,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("gapfill grid is dense and preserves the total event count") {
-    val out = Extensions.queries("ax_hourly_gapfill")(spark, dir)
+    val out = SparkEntry.queries("ax_hourly_gapfill")(spark, dir)
     val hours = out.select("hour").distinct().count()
     val types = out.select("event_type").distinct().count()
     assert(out.count() == hours * types, "grid must be dense")
@@ -53,7 +53,7 @@ class SemanticsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
-    val flagged = Extensions.queries("ax_outliers")(spark, dir).collect()
+    val flagged = SparkEntry.queries("ax_outliers")(spark, dir).collect()
     assert(flagged.nonEmpty)
     flagged.foreach { r =>
       val (n, s, ss) = stats(r.getString(1))
@@ -64,7 +64,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("skyline rows are mutually non-dominating and dominate all others") {
-    val rows = Extensions.queries("ax_skyline_parts")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_skyline_parts")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)
     def dominates(a: (Long, String, Long, Long), b: (Long, String, Long, Long)) =
@@ -85,7 +85,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("argmax matches a brute-force reduction") {
-    val out = Extensions.queries("ax_argmax_customer")(spark, dir).collect()
+    val out = SparkEntry.queries("ax_argmax_customer")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val brute = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_mktsegment"), col("c_custkey"),
@@ -100,7 +100,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("stratified sample is a subset with the declared hash rule") {
-    val rows = Extensions.queries("tx_sample_stratified")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_sample_stratified")(spark, dir).collect()
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "sample cannot exceed stratum")
     }
@@ -110,14 +110,14 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("copurchase pairs are canonical (a < b) with positive support") {
-    Extensions.queries("ax_copurchase")(spark, dir).collect().foreach { r =>
+    SparkEntry.queries("ax_copurchase")(spark, dir).collect().foreach { r =>
       assert(r.getLong(0) < r.getLong(1))
       assert(r.getLong(2) >= 1)
     }
   }
 
   test("pagerank ranks are positive and cover the requested top-k") {
-    val rows = Extensions.queries("ax_pagerank_parts")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_pagerank_parts")(spark, dir).collect()
     assert(rows.length == 20)
     rows.foreach(r => assert(r.getLong(1) > 0))
     // output is rank-descending
@@ -126,7 +126,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("chunking arithmetic matches the closed form") {
-    val rows = Extensions.queries("tx_chunk_stats")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_chunk_stats")(spark, dir).collect()
     val lens = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("doc_id", "CAST(length(text) AS BIGINT) AS l").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -141,7 +141,7 @@ class SemanticsSpec extends AnyFunSuite {
   test("pack bins respect the running-budget rule") {
     // every bin except a language's last must have accumulated >= 512
     // tokens by its end (otherwise the next doc would have joined it)
-    val rows = Extensions.queries("tx_pack_bins")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_pack_bins")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     rows.groupBy(_._1).foreach { case (_, bins) =>
       val sorted = bins.sortBy(_._2)
@@ -157,7 +157,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("repetition per-mille is in range and zero for tiny docs") {
-    val rows = Extensions.queries("tx_repetition")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_repetition")(spark, dir).collect()
     rows.foreach { r =>
       val (n, pm) = (r.getLong(1), r.getLong(2))
       assert(pm >= 0 && pm < 1000)
@@ -166,7 +166,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("error spikes all satisfy the 2x trailing rule") {
-    val rows = Extensions.queries("ax_error_spikes")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_error_spikes")(spark, dir).collect()
     rows.foreach { r =>
       assert(r.getLong(2) * 24 > r.getLong(3) * 2,
         s"flagged hour ${r.getString(1)} fails its own rule")
@@ -174,7 +174,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("upsert accounting is internally consistent") {
-    val r = Extensions.queries("ax_upsert_orders")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("ax_upsert_orders")(spark, dir).collect()(0)
     val (nFinal, nIns, nUpd) = (r.getLong(0), r.getLong(1), r.getLong(2))
     val nBase = spark.read.parquet(s"$dir/orders.parquet").count()
     assert(nFinal == nBase + nIns)
@@ -183,14 +183,14 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("unpivot long form carries exactly the wide cells") {
-    val out = Extensions.queries("ax_unpivot_metrics")(spark, dir)
+    val out = SparkEntry.queries("ax_unpivot_metrics")(spark, dir)
     val flags = out.select("l_returnflag").distinct().count()
     assert(out.count() == flags * 3)
     assert(out.select("metric").distinct().count() == 3)
   }
 
   test("decontam flags only corpus docs, with overlap verified from raw text") {
-    val rows = Extensions.queries("tx_decontam")(spark, dir).collect()
+    val rows = SparkEntry.queries("tx_decontam")(spark, dir).collect()
     assert(rows.nonEmpty, "fixture should have some contamination signal")
     rows.foreach { r =>
       assert(r.getLong(0) % 50 != 0, "benchmark docs must never be flagged")
@@ -212,7 +212,7 @@ class SemanticsSpec extends AnyFunSuite {
 
   test("redaction agrees with an independent java.util.regex recompute") {
     val deny = Seq("customer", "key", "value")
-    val out = Extensions.queries("tx_redact")(spark, dir).collect()
+    val out = SparkEntry.queries("tx_redact")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -232,13 +232,13 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("cluster retention keeps the longest member of every real cluster") {
-    val byCluster = Extensions.queries("dd_dup_clusters")(spark, dir).collect()
+    val byCluster = SparkEntry.queries("dd_dup_clusters")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._2).filter(_._2.length >= 2)
     val lens = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1).length.toLong).toMap
-    val kept = Extensions.queries("dd_cluster_retain")(spark, dir).collect()
+    val kept = SparkEntry.queries("dd_cluster_retain")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(byCluster.nonEmpty,
       "fixture should have at least one multi-member duplicate cluster")
@@ -254,7 +254,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("incremental aggregate merge equals the full recompute") {
-    val inc = Extensions.queries("ax_incremental_agg")(spark, dir).collect()
+    val inc = SparkEntry.queries("ax_incremental_agg")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val full = spark.read.parquet(s"$dir/orders.parquet")
       .groupBy(col("o_orderpriority"))
@@ -266,7 +266,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("ship-priority rows are ordered and the top revenue re-derives") {
-    val rows = Extensions.queries("ax_ship_priority")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_ship_priority")(spark, dir).collect()
     assert(rows.nonEmpty)
     val revs = rows.map(_.getLong(2))
     assert(revs.sameElements(revs.sortBy(-_)), "must be revenue-descending")
@@ -282,7 +282,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("scd2 intervals tile each customer's history without gaps or overlap") {
-    val rows = Extensions.queries("ax_scd2_customer")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_scd2_customer")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getString(3), r.getString(4), r.getLong(5)))
     val orderCounts = spark.read.parquet(s"$dir/orders.parquet")
@@ -312,7 +312,7 @@ class SemanticsSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val byCust = orders.groupBy(_._1)
-    Extensions.queries("ax_trailing_revenue")(spark, dir).collect()
+    SparkEntry.queries("ax_trailing_revenue")(spark, dir).collect()
       .take(200).foreach { r =>
         val (cust, day, got) = (r.getLong(0), r.getLong(2), r.getLong(3))
         val want = byCust(cust)
@@ -322,7 +322,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("curation funnel attrition is monotone and starts at the raw corpus") {
-    val rows = Extensions.queries("dd_curation_funnel")(spark, dir).collect()
+    val rows = SparkEntry.queries("dd_curation_funnel")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(_._1).toSeq ==
       Seq("0_raw", "1_quality", "2_exact_dedup", "3_near_dedup"))
@@ -337,7 +337,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("month-end balance takes period-last per customer, summed across") {
-    val out = Extensions.queries("ax_month_end_balance")(spark, dir).collect()
+    val out = SparkEntry.queries("ax_month_end_balance")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey"), col("o_orderkey"),
@@ -372,7 +372,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("triangle count matches a brute-force set recompute") {
-    val r = Extensions.queries("ax_triangle_count")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("ax_triangle_count")(spark, dir).collect()(0)
     val (nNodes, nEdges, nTris) = (r.getLong(0), r.getLong(1), r.getLong(2))
     // brute force from raw lineitem, driver-side
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -395,7 +395,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("silhouette partitions every vector and bounds confusion") {
-    val rows = Extensions.queries("sim_silhouette")(spark, dir).collect()
+    val rows = SparkEntry.queries("sim_silhouette")(spark, dir).collect()
     val total = spark.read.parquet(s"$dir/embeddings.parquet").count()
     assert(rows.map(_.getLong(1)).sum == total,
       "every vector belongs to exactly one label row")
@@ -407,7 +407,7 @@ class SemanticsSpec extends AnyFunSuite {
   test("mips augmented-cosine order coincides with inner-product order") {
     // the whole point of the norm-augmentation reduction: cosine over
     // the augmented space must rank exactly like the raw dot product
-    val rows = Extensions.queries("sim_mips_norm")(spark, dir).collect()
+    val rows = SparkEntry.queries("sim_mips_norm")(spark, dir).collect()
     assert(rows.length > 1)
     val dots = rows.map(_.getLong(1))
     val cos = rows.map(_.getLong(2))
@@ -423,7 +423,7 @@ class SemanticsSpec extends AnyFunSuite {
     // 2s⁴ ≤ 2s²) — the finer banding buys recall pointwise, paying in
     // candidate volume. A violation means the unrolled multiply chains
     // diverged from the curve they claim to compute.
-    val rows = Extensions.queries("dd_lsh_tuning")(spark, dir).collect()
+    val rows = SparkEntry.queries("dd_lsh_tuning")(spark, dir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(4) >= r.getLong(3),
@@ -432,7 +432,7 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("benford observed frequencies cover all digits and sum to ~1") {
-    val rows = Extensions.queries("ax_benford")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_benford")(spark, dir).collect()
     assert(rows.map(_.getLong(0)).toSeq == (1L to 9L),
       "all nine leading digits must appear")
     val ppmSum = rows.map(_.getLong(2)).sum
@@ -441,14 +441,14 @@ class SemanticsSpec extends AnyFunSuite {
   }
 
   test("join explosion prediction is exact") {
-    val r = Extensions.queries("ax_join_explosion")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("ax_join_explosion")(spark, dir).collect()(0)
     assert(r.getLong(2) == 1L, "histogram identity must predict exactly")
     assert(r.getLong(0) == r.getLong(1))
     assert(r.getLong(3) >= 1L && r.getLong(4) >= 1L)
   }
 
   test("weighted sample prefers heavy documents") {
-    val sample = Extensions.queries("tx_weighted_sample")(spark, dir)
+    val sample = SparkEntry.queries("tx_weighted_sample")(spark, dir)
     val sampleMean = sample.agg(avg(col("n_chars"))).collect()(0).getDouble(0)
     val corpusMean = spark.read.parquet(s"$dir/documents.parquet")
       .agg(avg(col("n_chars"))).collect()(0).getDouble(0)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory reference for the per-dimension embedding variance audit
@@ -22,7 +22,7 @@ class SimAuditSpec extends AnyFunSuite {
       val sxx = xs.map(x => x * x).sum
       (d.toLong, n, sx, sxx, n * sxx - sx * sx)
     }
-    val got = Extensions.queries("sim_dim_variance")(spark, dir).collect()
+    val got = SparkEntry.queries("sim_dim_variance")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got === expected)
@@ -54,7 +54,7 @@ class SimAuditSpec extends AnyFunSuite {
         top10(qid, sel.contains)).size.toLong
       (qid, 10L, overlap, overlap * 1000L / 10L)
     }
-    val got = Extensions.queries("sim_prune_recall")(spark, dir).collect()
+    val got = SparkEntry.queries("sim_prune_recall")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got === expected)
@@ -66,7 +66,7 @@ class SimAuditSpec extends AnyFunSuite {
   }
 
   test("sim_ivf_delta: delta accounting and an in-memory drift replay") {
-    val rows = Extensions.queries("sim_ivf_delta")(spark, dir).collect()
+    val rows = SparkEntry.queries("sim_ivf_delta")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
     assert(rows.map(_._1) === Seq("delta_assign", "retrain"))
@@ -111,7 +111,7 @@ class SimAuditSpec extends AnyFunSuite {
   }
 
   test("sim_bucket_drift cohort shares conserve; TV within ppm bounds") {
-    val rows = Extensions.queries("sim_bucket_drift")(spark, dir).collect()
+    val rows = SparkEntry.queries("sim_bucket_drift")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(rows.nonEmpty)
@@ -155,7 +155,7 @@ class SimAuditSpec extends AnyFunSuite {
   test("sim_pca_recall: PCA-32 beats the variance cutoff on this corpus") {
     // deterministic data + deterministic eigen → a stable regression
     // pin, not a hope: measured 500‰ vs 290‰ mean recall at sf0.001
-    val rows = Extensions.queries("sim_pca_recall")(spark, dir).collect()
+    val rows = SparkEntry.queries("sim_pca_recall")(spark, dir).collect()
     assert(rows.length == 10)
     rows.foreach { r =>
       assert(r.getLong(3) == r.getLong(1) * 100, "recall_pca_pm formula")
@@ -165,5 +165,16 @@ class SimAuditSpec extends AnyFunSuite {
     val meanVar = rows.map(_.getLong(4)).sum / rows.length
     assert(meanPca > meanVar,
       s"anisotropic projection should beat axis dropping: $meanPca vs $meanVar")
+  }
+
+  test("sim_pca_recall's oracle is generated by its own run and read late") {
+    Similarity.resetPcaOracle()
+    assert(SparkEntry.oracleSql("sim_pca_recall") ===
+      Similarity.PcaOraclePlaceholder)
+    SparkEntry.queries("sim_pca_recall")(spark, dir)
+    val generated = SparkEntry.oracleSql("sim_pca_recall")
+    assert(generated !== Similarity.PcaOraclePlaceholder)
+    assert(generated.startsWith("WITH qt AS MATERIALIZED") &&
+      generated.contains("AS y FROM qt t"), generated)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ class SketchScoreSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("cms estimates are one-sided: never below the exact count") {
-    val rows = Extensions.queries("ax_cms_freq")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_cms_freq")(spark, dir).collect()
     assert(rows.length == 8, "one row per probe key")
     rows.foreach { r =>
       val (exact, est, ok) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -31,15 +31,15 @@ class SketchScoreSpec extends AnyFunSuite {
     // fixed-memory property that makes it a 100 TB operator. Probe it
     // through the public query: estimates can never exceed total rows.
     val total = graft.Tables.events(spark, dir).count()
-    Extensions.queries("ax_cms_freq")(spark, dir).collect().foreach { r =>
+    SparkEntry.queries("ax_cms_freq")(spark, dir).collect().foreach { r =>
       assert(r.getLong(2) <= total, "estimate exceeds corpus size")
     }
   }
 
   test("minhash estimate tracks exact Jaccard on every verified pair") {
-    val rows = Extensions.queries("dd_minhash_est")(spark, dir).collect()
+    val rows = SparkEntry.queries("dd_minhash_est")(spark, dir).collect()
     assert(rows.nonEmpty, "no verified pairs to measure the estimator on")
-    val pairCount = Extensions.queries("dd_minhash_pairs")(spark, dir).count()
+    val pairCount = SparkEntry.queries("dd_minhash_pairs")(spark, dir).count()
     assert(rows.length == pairCount,
       "estimator must cover exactly the verified-pair set")
     rows.foreach { r =>
@@ -54,9 +54,9 @@ class SketchScoreSpec extends AnyFunSuite {
   }
 
   test("variant path reads agree with the struct-schema JSON reads") {
-    val v = Extensions.queries("ax_props_variant")(spark, dir)
+    val v = SparkEntry.queries("ax_props_variant")(spark, dir)
       .select(col("event_type"), col("sum_k"), col("n_with_k"))
-    val j = Extensions.queries("ax_props_json")(spark, dir)
+    val j = SparkEntry.queries("ax_props_json")(spark, dir)
       .select(col("event_type"), col("sum_k").as("s2"), col("n_with_k").as("n2"))
     assert(v.join(j, "event_type")
       .filter(col("n_with_k") =!= col("n2") || col("sum_k") =!= col("s2"))
@@ -65,7 +65,7 @@ class SketchScoreSpec extends AnyFunSuite {
   }
 
   test("hll intersection is non-degenerate and inclusion-exclusion holds") {
-    val r = Extensions.queries("dd_hll_intersect")(spark, dir).head()
+    val r = SparkEntry.queries("dd_hll_intersect")(spark, dir).head()
     val (na, nb, nu, nBoth, ok) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
     assert(nBoth == na + nb - nu, "inclusion-exclusion identity broken")
@@ -75,7 +75,7 @@ class SketchScoreSpec extends AnyFunSuite {
   }
 
   test("quality-logit scores are per-mille means and sources partition docs") {
-    val res = Extensions.queries("tx_quality_logit")(spark, dir).collect()
+    val res = SparkEntry.queries("tx_quality_logit")(spark, dir).collect()
     assert(res.nonEmpty)
     val nDocs = res.map(_.getLong(1)).sum
     val total = spark.read.parquet(s"$dir/documents.parquet")

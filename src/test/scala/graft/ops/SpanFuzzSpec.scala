@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential tests for the seed-and-extend span core
@@ -315,9 +315,9 @@ class SpanFuzzSpec extends AnyFunSuite {
 
   test("sampled span audit agrees with the full audit within its own CI") {
     val dir = "/root/testdata/sf0.001"
-    val full = Extensions.queries("dd_span_guarantee")(spark, dir)
+    val full = SparkEntry.queries("dd_span_guarantee")(spark, dir)
       .collect().head
-    val samp = Extensions.queries("dd_span_guarantee_s")(spark, dir)
+    val samp = SparkEntry.queries("dd_span_guarantee_s")(spark, dir)
       .collect().head
     val rFull = full.getLong(3) // recall_pm
     val rSamp = samp.getLong(3)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-memory references for the temporal-statistics pair (TWAP,
@@ -11,7 +11,7 @@ class TemporalStatsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def q(name: String) = Extensions.queries(name)(spark, dir)
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
   test("ax_twap matches the in-memory hold-until-next-event computation") {
     val rows = spark.read.parquet(s"$dir/events.parquet")
@@ -141,7 +141,7 @@ class TemporalStatsSpec extends AnyFunSuite {
       val (n, s) = (xs.size.toLong, xs.map(_._2).sum)
       (b, n, s, prior, (1000L * s + 10L * prior) / (n + 10L))
     }.toSeq.sortBy(_._1)
-    val got = Extensions.queries("ax_target_encode")(spark, dir).collect()
+    val got = SparkEntry.queries("ax_target_encode")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got === expected)

@@ -1,7 +1,6 @@
 package graft.plans
 
-import graft.SparkTestSession
-import graft.ops.Extensions
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,7 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def install(): Unit =
-    Extensions.queries("ax_mv_rewrite")(spark, dir).collect()
+    SparkEntry.queries("ax_mv_rewrite")(spark, dir).collect()
 
   private def raw: DataFrame = spark.read.parquet(s"$dir/lineitem.parquet")
 
@@ -63,7 +62,7 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
   }
 
   test("every legal STAR grain x measure combination rewrites and is exact") {
-    Extensions.queries("ax_mv_star")(spark, dir).collect() // register star
+    SparkEntry.queries("ax_mv_star")(spark, dir).collect() // register star
     val rnd = new scala.util.Random(43)
     def ord = spark.read.parquet(s"$dir/orders.parquet")
     def joined = raw.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -88,12 +87,12 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
         assert(!planOf(again).contains("mv_star"))
         assert(served == collectSorted(again),
           s"star served != raw for grain=$grain measures=${ms.map(_._1)}")
-      } finally Extensions.queries("ax_mv_star")(spark, dir).collect()
+      } finally SparkEntry.queries("ax_mv_star")(spark, dir).collect()
     }
   }
 
   test("every JOIN-BACK dim-attribute grain rewrites and is exact") {
-    Extensions.queries("ax_mv_star_attr")(spark, dir).collect() // FK MV
+    SparkEntry.queries("ax_mv_star_attr")(spark, dir).collect() // FK MV
     val rnd = new scala.util.Random(47)
     def ord = spark.read.parquet(s"$dir/orders.parquet")
     def joined = raw.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -120,12 +119,12 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
         assert(served == collectSorted(again),
           s"join-back served != raw for grain=$grain " +
             s"measures=${ms.map(_._1)}")
-      } finally Extensions.queries("ax_mv_star_attr")(spark, dir).collect()
+      } finally SparkEntry.queries("ax_mv_star_attr")(spark, dir).collect()
     }
   }
 
   test("every SNOWFLAKE one- and two-dim grain rewrites and is exact") {
-    Extensions.queries("ax_mv_snowflake")(spark, dir).collect()
+    SparkEntry.queries("ax_mv_snowflake")(spark, dir).collect()
     val rnd = new scala.util.Random(53)
     def ord = spark.read.parquet(s"$dir/orders.parquet")
     def part = spark.read.parquet(s"$dir/part.parquet")
@@ -157,12 +156,12 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
           s"snowflake served != raw for grain=$grain " +
             s"measures=${ms.map(_._1)}")
       } finally
-        Extensions.queries("ax_mv_snowflake")(spark, dir).collect()
+        SparkEntry.queries("ax_mv_snowflake")(spark, dir).collect()
     }
   }
 
   test("ROLLUP over the SNOWFLAKE serves from the composite rollup") {
-    Extensions.queries("ax_mv_snowflake")(spark, dir).collect()
+    SparkEntry.queries("ax_mv_snowflake")(spark, dir).collect()
     def ord = spark.read.parquet(s"$dir/orders.parquet")
     def part = spark.read.parquet(s"$dir/part.parquet")
     def joined = raw.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -179,7 +178,7 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
       assert(served == collectSorted(q),
         "snowflake ROLLUP served != raw")
     } finally
-      Extensions.queries("ax_mv_snowflake")(spark, dir).collect()
+      SparkEntry.queries("ax_mv_snowflake")(spark, dir).collect()
   }
 
   test("near-miss shapes are all left alone") {

@@ -1,7 +1,6 @@
 package graft.plans
 
-import graft.SparkTestSession
-import graft.ops.Extensions
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +17,7 @@ class MvRewriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def gate() = Extensions.queries("ax_mv_rewrite")(spark, dir)
+  private def gate() = SparkEntry.queries("ax_mv_rewrite")(spark, dir)
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -73,7 +72,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("a dimension-only filter is served from the MV (ax_mv_filter)") {
-    val df = Extensions.queries("ax_mv_filter")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_filter")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_lineitem") && !p.contains("lineitem.parquet"),
       s"dim-filtered query not served from the rollup:\n$p")
@@ -98,14 +97,14 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("the SQL front door is served from the MV too") {
-    val p = planOf(Extensions.queries("sq_mv_serve_sql")(spark, dir))
+    val p = planOf(SparkEntry.queries("sq_mv_serve_sql")(spark, dir))
     assert(p.contains("mv_lineitem"), s"SQL text not served from MV:\n$p")
     assert(!p.contains("lineitem.parquet"),
       s"raw fact scan survived the SQL-side rewrite:\n$p")
   }
 
   test("the min/max SQL twin is served from the MV too") {
-    val p = planOf(Extensions.queries("sq_mv_minmax_sql")(spark, dir))
+    val p = planOf(SparkEntry.queries("sq_mv_minmax_sql")(spark, dir))
     assert(p.contains("mv_lineitem"),
       s"min/max SQL text not served from MV:\n$p")
     assert(!p.contains("lineitem.parquet"),
@@ -113,7 +112,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("star upkeep reads the stored join rollup and joins only the delta slice") {
-    val df = Extensions.queries("ax_mv_star_delta")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_star_delta")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_star_pre"), s"stored star rollup not read:\n$p")
     assert(p.contains("PushedFilters") && p.contains("l_shipdate"),
@@ -123,7 +122,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("incremental upkeep reads the stored rollup and only the delta slice") {
-    val df = Extensions.queries("ax_mv_delta")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_delta")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_lineitem_pre"), s"stored rollup not read:\n$p")
     // the fact scan must carry the pushed post-cut shipdate predicate
@@ -197,7 +196,7 @@ class MvRewriteSpec extends AnyFunSuite {
   private def ord = spark.read.parquet(s"$dir/orders.parquet")
 
   test("the star gate is served from the join rollup: zero fact/dim bytes") {
-    val df = Extensions.queries("ax_mv_star")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_star")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_star"), s"star MV not in plan:\n$p")
     assert(!p.contains("lineitem.parquet") && !p.contains("orders.parquet"),
@@ -206,7 +205,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("star serving is exact: equals the raw join recompute") {
-    val served = Extensions.queries("ax_mv_star")(spark, dir).collect()
+    val served = SparkEntry.queries("ax_mv_star")(spark, dir).collect()
       .map(_.toSeq).sortBy(_.mkString("|"))
     MvRewrite.clear()
     try {
@@ -221,11 +220,11 @@ class MvRewriteSpec extends AnyFunSuite {
       assert(!planOf(raw).contains("mv_star"))
       val expect = raw.collect().map(_.toSeq).sortBy(_.mkString("|"))
       assert(served.sameElements(expect), "star MV answer diverged from raw")
-    } finally Extensions.queries("ax_mv_star")(spark, dir)
+    } finally SparkEntry.queries("ax_mv_star")(spark, dir)
   }
 
   test("a non-registered join key blocks the star rewrite") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     // joining fact to dim on the WRONG columns must never be served
     val df = li.join(ord, col("l_suppkey") === col("o_custkey"))
       .groupBy(col("o_orderpriority"))
@@ -235,7 +234,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("a measure-column filter blocks the star rewrite") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_quantity") > 10)
       .groupBy(col("o_orderpriority"))
@@ -250,7 +249,7 @@ class MvRewriteSpec extends AnyFunSuite {
     // join-back (pinned below), so the negative is "no FK grain"
     MvRewrite.clear()
     try {
-      Extensions.queries("ax_mv_star")(spark, dir)
+      SparkEntry.queries("ax_mv_star")(spark, dir)
       val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .filter(col("o_orderstatus") === "F")
         .groupBy(col("o_orderpriority"))
@@ -261,7 +260,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("a third join blocks the star rewrite") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     val cust = spark.read.parquet(s"$dir/customer.parquet")
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
@@ -272,7 +271,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("an outer join blocks the star rewrite") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"),
         "left_outer")
       .groupBy(col("o_orderpriority"))
@@ -282,7 +281,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("the star rewrite fires through the SQL front door too") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     li.createOrReplaceTempView("mv_star_li")
     ord.createOrReplaceTempView("mv_star_ord")
     val df = spark.sql(
@@ -351,13 +350,13 @@ class MvRewriteSpec extends AnyFunSuite {
         "a dim rewritten after registration must fall back to the raw join")
     } finally {
       MvRewrite.clear()
-      Extensions.queries("ax_mv_star")(spark, dir)
+      SparkEntry.queries("ax_mv_star")(spark, dir)
       gate()
     }
   }
 
   test("the coarser single-side grain is served from the star rollup") {
-    Extensions.queries("ax_mv_star")(spark, dir)
+    SparkEntry.queries("ax_mv_star")(spark, dir)
     // group by the FACT-side grain column only, no filter, count(*) too
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_returnflag"))
@@ -380,7 +379,7 @@ class MvRewriteSpec extends AnyFunSuite {
   // ----- join-back (FK-grain) star serving ----------------------------
 
   test("ax_mv_star_attr is served by join-back: rollup x dim, zero fact") {
-    val df = Extensions.queries("ax_mv_star_attr")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_star_attr")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_star_fk"), s"FK rollup not in plan:\n$p")
     assert(!p.contains("lineitem.parquet"),
@@ -390,7 +389,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("join-back serving is exact: equals the raw join recompute") {
-    val served = Extensions.queries("ax_mv_star_attr")(spark, dir).collect()
+    val served = SparkEntry.queries("ax_mv_star_attr")(spark, dir).collect()
       .map(_.toSeq).sortBy(_.mkString("|"))
     MvRewrite.clear()
     try {
@@ -407,13 +406,13 @@ class MvRewriteSpec extends AnyFunSuite {
       assert(served.sameElements(expect),
         "join-back answer diverged from the raw join recompute")
     } finally {
-      Extensions.queries("ax_mv_star_attr")(spark, dir)
+      SparkEntry.queries("ax_mv_star_attr")(spark, dir)
       gate()
     }
   }
 
   test("ANY dim attribute is servable from the one FK-grain rollup") {
-    Extensions.queries("ax_mv_star_attr")(spark, dir)
+    SparkEntry.queries("ax_mv_star_attr")(spark, dir)
     // an attribute no registered attribute-grain anticipates
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
@@ -427,27 +426,27 @@ class MvRewriteSpec extends AnyFunSuite {
   test("a grain WITHOUT the FK cannot serve a dim attribute (negative)") {
     MvRewrite.clear()
     try {
-      Extensions.queries("ax_mv_star")(spark, dir) // op_rf grain only
+      SparkEntry.queries("ax_mv_star")(spark, dir) // op_rf grain only
       val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderstatus"))
         .agg(sum(col("l_quantity").cast("long")).as("q"))
       assert(!planOf(df).contains("mv_star"),
         "o_orderstatus is not functionally determined by the op_rf grain")
     } finally {
-      Extensions.queries("ax_mv_star_attr")(spark, dir)
+      SparkEntry.queries("ax_mv_star_attr")(spark, dir)
       gate()
     }
   }
 
   test("join-back fires through the SQL front door too (zero fact bytes)") {
-    val df = Extensions.queries("sq_mv_attr_sql")(spark, dir)
+    val df = SparkEntry.queries("sq_mv_attr_sql")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_star_fk") && !p.contains("lineitem.parquet"),
       s"SQL-text dim-attribute aggregate not served by join-back:\n$p")
   }
 
   test("a non-grain FACT filter blocks join-back too") {
-    Extensions.queries("ax_mv_star_attr")(spark, dir)
+    SparkEntry.queries("ax_mv_star_attr")(spark, dir)
     // l_returnflag is lost at the FK grain; the rollup cannot apply it
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_returnflag") === "R")
@@ -465,7 +464,7 @@ class MvRewriteSpec extends AnyFunSuite {
       .join(part, col("l_partkey") === col("p_partkey"))
 
   test("ax_mv_snowflake is served: rollup x two live dims, zero fact") {
-    val df = Extensions.queries("ax_mv_snowflake")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_snowflake")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_snow_fk"), s"composite rollup not in plan:\n$p")
     assert(!p.contains("lineitem.parquet"),
@@ -475,7 +474,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("snowflake serving is exact: equals the raw three-table recompute") {
-    val served = Extensions.queries("ax_mv_snowflake")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_snowflake")(spark, dir)
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     MvRewrite.clear()
     try {
@@ -492,13 +491,13 @@ class MvRewriteSpec extends AnyFunSuite {
       assert(served.sameElements(expect),
         "snowflake answer diverged from the raw recompute")
     } finally {
-      Extensions.queries("ax_mv_snowflake")(spark, dir)
+      SparkEntry.queries("ax_mv_snowflake")(spark, dir)
       gate()
     }
   }
 
   test("one-dim groupings over the three-table join serve from the composite rollup") {
-    Extensions.queries("ax_mv_snowflake")(spark, dir)
+    SparkEntry.queries("ax_mv_snowflake")(spark, dir)
     val byPart = snowJoined.groupBy(col("p_brand"))
       .agg(sum(col("l_quantity").cast("long")).as("q"))
     val p = planOf(byPart)
@@ -507,7 +506,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("a composite grain missing one FK keeps the raw plan (negative)") {
-    Extensions.queries("ax_mv_snowflake")(spark, dir)
+    SparkEntry.queries("ax_mv_snowflake")(spark, dir)
     MvRewrite.clear()
     try {
       val factKey = MvRewrite.keyFor(spark, s"$dir/lineitem.parquet")
@@ -532,13 +531,13 @@ class MvRewriteSpec extends AnyFunSuite {
         s"a grain without l_partkey cannot determine part attributes:\n$p")
     } finally {
       MvRewrite.clear()
-      Extensions.queries("ax_mv_snowflake")(spark, dir)
+      SparkEntry.queries("ax_mv_snowflake")(spark, dir)
       gate()
     }
   }
 
   test("a fourth table in the join blocks the snowflake rewrite") {
-    Extensions.queries("ax_mv_snowflake")(spark, dir)
+    SparkEntry.queries("ax_mv_snowflake")(spark, dir)
     val cust = spark.read.parquet(s"$dir/customer.parquet")
     val df = snowJoined
       .join(cust, col("o_custkey") === col("c_custkey"))
@@ -551,7 +550,7 @@ class MvRewriteSpec extends AnyFunSuite {
   // ----- grouping sets above the star (Aggregate over Expand) ----------
 
   test("ax_mv_rollup_sets is served: ROLLUP over the star, zero fact") {
-    val df = Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+    val df = SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
     val p = planOf(df)
     assert(p.contains("mv_star_fk"), s"FK rollup not in plan:\n$p")
     assert(!p.contains("lineitem.parquet"),
@@ -561,7 +560,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("grouping-sets serving is exact, including the grand total") {
-    val served = Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     MvRewrite.clear()
     try {
@@ -576,13 +575,13 @@ class MvRewriteSpec extends AnyFunSuite {
       assert(served.sameElements(expect),
         "grouping-sets answer diverged from the raw recompute")
     } finally {
-      Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+      SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
       gate()
     }
   }
 
   test("a grouping set with a non-determined fact column keeps raw") {
-    Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+    SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
     // l_returnflag is lost at the FK grain: no set containing it can
     // be derived from the rollup
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -593,7 +592,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("CUBE and grouping_id() are served through the same path") {
-    Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+    SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
     val df = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
@@ -609,17 +608,17 @@ class MvRewriteSpec extends AnyFunSuite {
         .collect().map(_.toSeq).sortBy(_.mkString("|"))
       assert(served.sameElements(raw), "CUBE served != raw")
     } finally {
-      Extensions.queries("ax_mv_rollup_sets")(spark, dir)
+      SparkEntry.queries("ax_mv_rollup_sets")(spark, dir)
       gate()
     }
   }
 
   test("snowflake and grouping-sets rewrites fire through the SQL front door") {
-    val snow = Extensions.queries("sq_mv_snow_sql")(spark, dir)
+    val snow = SparkEntry.queries("sq_mv_snow_sql")(spark, dir)
     val ps = planOf(snow)
     assert(ps.contains("mv_snow_fk") && !ps.contains("lineitem.parquet"),
       s"SQL-text snowflake aggregate not served:\n$ps")
-    val sets = Extensions.queries("sq_mv_sets_sql")(spark, dir)
+    val sets = SparkEntry.queries("sq_mv_sets_sql")(spark, dir)
     val pr = planOf(sets)
     assert(pr.contains("mv_star_fk") && !pr.contains("lineitem.parquet"),
       s"SQL-text ROLLUP not served:\n$pr")

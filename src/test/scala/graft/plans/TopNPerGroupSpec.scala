@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.expressions.Window
@@ -94,7 +94,7 @@ class TopNPerGroupSpec extends AnyFunSuite {
   }
 
   test("the ax_topn_rewrite gate query plans through the heap operator") {
-    val df = graft.ops.Extensions.queries("ax_topn_rewrite")(spark, dir)
+    val df = SparkEntry.queries("ax_topn_rewrite")(spark, dir)
     val names = nodeNames(df)
     assert(names.exists(_.contains("TopNPerGroupFinal")),
       s"gate query lost the rewrite: ${names.mkString(",")}")

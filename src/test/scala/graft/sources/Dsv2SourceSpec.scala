@@ -1,7 +1,7 @@
 package graft.sources
 
-import graft.SparkTestSession
-import graft.ops.{Dsv2Source, Extensions}
+import graft.{SparkEntry, SparkTestSession}
+import graft.ops.Dsv2Source
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   test("filters are pushed and the read schema is pruned") {
-    val p = planOf(Extensions.queries("ax_dsv2_pushdown")(spark, dir))
+    val p = planOf(SparkEntry.queries("ax_dsv2_pushdown")(spark, dir))
     assert(p.contains("PushedFilters: [EqualTo(lang,en), " +
       "GreaterThanOrEqual(n_chars,200)]"), s"filters not pushed:\n$p")
     assert(p.contains("ReadSchema: struct<source:string,n_chars:bigint>"),
@@ -75,8 +75,8 @@ class Dsv2SourceSpec extends AnyFunSuite {
   test("the write commit leaves no staging residue and overwrite truncates") {
     // run the roundtrip twice: the second overwrite must fully replace
     // the first (no doubled rows) and no _staging/.tmp files survive
-    Extensions.queries("ax_dsv2_roundtrip")(spark, dir).collect()
-    val rows = Extensions.queries("ax_dsv2_roundtrip")(spark, dir).collect()
+    SparkEntry.queries("ax_dsv2_roundtrip")(spark, dir).collect()
+    val rows = SparkEntry.queries("ax_dsv2_roundtrip")(spark, dir).collect()
     val total = rows.map(_.getLong(1)).sum
     val expect = spark.read.parquet(s"$dir/documents.parquet").count()
     assert(total == expect, s"overwrite doubled or lost rows: $total")
@@ -171,7 +171,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   }
 
   test("honest stats elect the connector side for broadcast, hint-free") {
-    val p = planOf(Extensions.queries("ax_dsv2_join")(spark, dir))
+    val p = planOf(SparkEntry.queries("ax_dsv2_join")(spark, dir))
     assert(p.contains("BroadcastHashJoin"),
       s"stats-driven broadcast election did not fire:\n$p")
     // the broadcast (build) side must be the connector scan, not parquet
@@ -284,7 +284,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   }
 
   test("streaming admission cap yields multiple batches and matches batch agg") {
-    val df = Extensions.queries("st_dsv2_stream")(spark, dir)
+    val df = SparkEntry.queries("st_dsv2_stream")(spark, dir)
     val got = df.collect().map(_.toSeq).sortBy(_.mkString("|"))
     val expect = spark.read.parquet(s"$dir/documents.parquet")
       .groupBy(col("lang"))
@@ -342,7 +342,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   }
 
   test("the DPP gate prunes at runtime and the plan carries the subquery") {
-    val df = Extensions.queries("ax_dsv2_dpp")(spark, dir)
+    val df = SparkEntry.queries("ax_dsv2_dpp")(spark, dir)
     graft.sources.GraftLines.lastRuntimePruned.set(false)
     df.collect() // runtime filters only apply during execution
     val p = planOf(df)
@@ -373,7 +373,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   }
 
   test("the zonemap gate plans fewer files and no sidecar means no pruning") {
-    val df = Extensions.queries("ax_dsv2_zonemap")(spark, dir)
+    val df = SparkEntry.queries("ax_dsv2_zonemap")(spark, dir)
     df.collect()
     val path = Dsv2Source.dppFixturePath(spark, dir)
     val totalFiles = Option(new java.io.File(path).listFiles())
@@ -399,7 +399,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   // ----- aggregate pushdown (metadata-only queries) --------------------
 
   test("count/min/max are answered from the sidecar: zero files opened") {
-    val df = Extensions.queries("ax_dsv2_agg_push")(spark, dir)
+    val df = SparkEntry.queries("ax_dsv2_agg_push")(spark, dir)
     graft.sources.GraftLines.lastPlannedFiles.set(-1)
     val r = df.collect()(0)
     assert(graft.sources.GraftLines.lastPlannedFiles.get() == 0,
@@ -557,7 +557,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
   }
 
   test("the sink gate leaves a clean directory: epochs, markers, no stage") {
-    Extensions.queries("st_dsv2_sink")(spark, dir).collect()
+    SparkEntry.queries("st_dsv2_sink")(spark, dir).collect()
     val tag = new java.io.File(dir).getName.replace('.', '_')
     val out = new java.io.File(s"target/dsv2_stream_sink/$tag")
     val entries = Option(out.listFiles()).getOrElse(Array.empty)

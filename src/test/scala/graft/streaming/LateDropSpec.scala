@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestSession
-import graft.ops.Extensions
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +15,7 @@ class LateDropSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("late head is dropped beyond the watermark, kept inside it") {
-    val res = Extensions.queries("st_late_drop")(spark, dir)
+    val res = SparkEntry.queries("st_late_drop")(spark, dir)
       .agg(sum(col("n_events")).as("kept"),
         min(col("hour")).as("first_hour")).head()
     val kept = res.getLong(0)
@@ -42,5 +41,15 @@ class LateDropSpec extends AnyFunSuite {
     val firstHour = res.getTimestamp(1)
     assert(firstHour.getTime <= mt.getTime - 4L * 24 * 3600 * 1000,
       "no straddling window: the late-accept path was not exercised")
+  }
+
+  test("staging keeps the input slices and deletes the stage scratch dir") {
+    SparkEntry.queries("st_late_drop")(spark, dir).collect()
+    val root = new java.io.File("target/stream_late/events")
+    assert(!new java.io.File(root, "stage_sf0_001").exists(),
+      "the stage scratch dir outlived the build")
+    val input = new java.io.File(root, "input_sf0_001").listFiles()
+    assert(input != null && input.exists(_.getName.endsWith(".parquet")),
+      "the staged input dir holds no slice")
   }
 }

@@ -8,7 +8,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 
 /** End-to-end spec for the streaming long-span ingest gate
   * (st_span_probe) on a hand-built corpus: the staged three-slice
@@ -62,7 +62,7 @@ class SpanProbeStreamSpec extends AnyFunSuite {
   }
 
   private lazy val result: Map[Long, (Long, Long, Long)] =
-    StreamingGate.queries("st_span_probe")(spark, dir)
+    SparkEntry.queries("st_span_probe")(spark, dir)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestSession
-import graft.ops.Extensions
+import graft.{SparkEntry, SparkTestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,8 +16,8 @@ class TimerSessionsSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("timer sessions equal session_window sessions row-for-row") {
-    val timer = Extensions.queries("st_timer_sessions")(spark, dir).collect()
-    val packaged = Extensions.queries("st_sessionize")(spark, dir).collect()
+    val timer = SparkEntry.queries("st_timer_sessions")(spark, dir).collect()
+    val packaged = SparkEntry.queries("st_sessionize")(spark, dir).collect()
     assert(timer.length == packaged.length,
       s"cardinality: timer ${timer.length} vs session_window ${packaged.length}")
     assert(timer.map(_.toString).sorted.toSeq ==
@@ -26,7 +25,7 @@ class TimerSessionsSpec extends AnyFunSuite {
   }
 
   test("exactly-once emission and watermark-closable ends") {
-    val rows = Extensions.queries("st_timer_sessions")(spark, dir)
+    val rows = SparkEntry.queries("st_timer_sessions")(spark, dir)
     // no duplicate emission of a session under update mode
     assert(rows.groupBy("user_id", "session_start").count()
       .filter(col("count") > 1).count() == 0)

@@ -36,9 +36,32 @@ object Tables {
 }
 
 object Sessions {
-  /** configs every graft session needs (test, Verify, Bench) */
+  /** Configs every graft session needs (tests, Verify, Bench, Explain,
+    * ScaleUp, the benchmark), plus graft's Catalyst pieces, installed
+    * here once through [[graft.functions.GraftSparkExtensions]] so a
+    * gate's plan never depends on which gates ran before it. Each call
+    * injects again: call it once per builder.
+    */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new graft.functions.GraftSparkExtensions)
+
+  /** A child session that plans as stock Spark: it carries the parent's
+    * modifiable SQL conf, with graft's optimizer rules switched off
+    * through Spark's own `spark.sql.optimizer.excludedRules`. A gate
+    * meant to show the stock plan builds on it.
+    */
+  def stockPlans(spark: SparkSession): SparkSession = {
+    val child = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) child.conf.set(k, v)
+    }
+    val key = org.apache.spark.sql.internal.SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+    val graftRules = Seq(graft.plans.RewriteTopNPerGroup.ruleName,
+      classOf[graft.plans.MvRewrite.RewriteAggToMv].getName)
+    child.conf.set(key, (spark.conf.getOption(key).toSeq ++ graftRules).mkString(","))
+    child
+  }
 }

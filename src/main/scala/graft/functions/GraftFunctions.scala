@@ -5,21 +5,18 @@ import org.apache.spark.sql.graft.{CosineFloorScaled, DotProductLong, Interop, L
 
 import graft.polarify.Program
 
-/** Scala + SQL surface for graft's native expressions, and SQL
-  * registration for compiled polarify programs.
+/** `SparkSessionExtensions` entry point, and the ONE place graft's
+  * Catalyst pieces are registered: the native SQL functions `dot_long`
+  * and `graft_hash60`, the [[graft.plans.RewriteTopNPerGroup]] and
+  * [[graft.plans.MvRewrite.RewriteAggToMv]] optimizer rules, and the
+  * [[graft.plans.TopNPerGroupStrategy]] planner strategy.
   *
-  * Registration goes through the session `FunctionRegistry`, so a
-  * registered name expands to a *native Catalyst expression tree* during
-  * analysis — `spark.sql("SELECT signum_pf(x) ...")` plans the exact same
-  * codegen'd `CaseWhen` as the DataFrame path. No UDF, no serialization
-  * boundary, full optimizer visibility (constant folding, pushdown
-  * through the expression, whole-stage codegen).
-  */
-/** `SparkSessionExtensions` entry point: activate graft's native
-  * functions cluster-wide with
-  * `spark.sql.extensions=graft.functions.GraftSparkExtensions` — no
-  * code change at the call sites, every session (including thrift/SQL
-  * gateways) gets `dot_long` resolved to the native expression.
+  * Every graft session gets it from [[graft.Sessions.configure]]
+  * (`withExtensions`), so a gate's plan never depends on which gates
+  * ran before it; a SQL gateway gets the same from
+  * `spark.sql.extensions=graft.functions.GraftSparkExtensions`. A query
+  * that must keep the stock plan opts out per session with Spark's
+  * `spark.sql.optimizer.excludedRules` ([[graft.Sessions.stockPlans]]).
   */
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -39,16 +36,22 @@ class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions 
         require(exprs.length == 1, s"graft_hash60 expects 1 argument, got ${exprs.length}")
         org.apache.spark.sql.graft.Md5Hash60(exprs.head)
       }))
-    // the optimizer tier, cluster-wide: the same rules/strategy the gate
-    // installs per session through spark.experimental (TopNPerGroup.install,
-    // MvRewrite.install) ride spark.sql.extensions here, so a SQL gateway
-    // gets top-k-per-group planning and MV serving with zero call-site code
     ext.injectOptimizerRule(_ => graft.plans.RewriteTopNPerGroup)
     ext.injectOptimizerRule(spark => graft.plans.MvRewrite.RewriteAggToMv(spark))
     ext.injectPlannerStrategy(_ => graft.plans.TopNPerGroupStrategy)
   }
 }
 
+/** Scala + SQL surface for graft's native expressions, and SQL
+  * registration for compiled polarify programs.
+  *
+  * Registration goes through the session `FunctionRegistry`, so a
+  * registered name expands to a *native Catalyst expression tree* during
+  * analysis — `spark.sql("SELECT signum_pf(x) ...")` plans the exact same
+  * codegen'd `CaseWhen` as the DataFrame path. No UDF, no serialization
+  * boundary, full optimizer visibility (constant folding, pushdown
+  * through the expression, whole-stage codegen).
+  */
 object GraftFunctions {
 
   /** native codegen'd dot product over two array<bigint> columns */
@@ -108,16 +111,6 @@ object GraftFunctions {
     Interop.column(org.apache.spark.sql.graft.DiagonalBoundaries(
       Interop.expression(a), Interop.expression(b),
       Interop.expression(pa), Interop.expression(pb)))
-
-  /** Register `dot_long` for SQL use in this session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_long",
-      exprs => {
-        require(exprs.length == 2, s"dot_long expects 2 arguments, got ${exprs.length}")
-        DotProductLong(exprs.head, exprs(1))
-      },
-      "built-in")
 
   /** Register a compiled polarify program as a SQL function: the
     * reference's `@polarify`-decorated function made callable from

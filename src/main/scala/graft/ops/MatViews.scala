@@ -113,7 +113,6 @@ object MatViews {
             discCents(col("l_extendedprice"), col("l_discount"))),
           "mv_max_qty" -> measureInputs(spark, base, qtyLong(col("l_quantity"))),
           "mv_min_qty" -> measureInputs(spark, base, qtyLong(col("l_quantity"))))))
-    MvRewrite.install(spark)
   }
 
   // -------------------------------------------------------------------
@@ -305,7 +304,6 @@ object MatViews {
             discCents(col("l_extendedprice"), col("l_discount"))))),
       factStamp = MvRewrite.stampFor(factKey),
       dimStamp = MvRewrite.stampFor(dimKey)))
-    MvRewrite.install(spark)
   }
 
   private[ops] def mvStar(spark: SparkSession, dir: String): DataFrame = {
@@ -399,7 +397,6 @@ object MatViews {
             discCents(col("l_extendedprice"), col("l_discount"))))),
       factStamp = MvRewrite.stampFor(factKey),
       dimStamp = 0L)) // live-dim serving: dim freshness is a non-issue
-    MvRewrite.install(spark)
   }
 
   private def mvStarAttr(spark: SparkSession, dir: String): DataFrame = {
@@ -494,7 +491,6 @@ object MatViews {
           "mv_disc_cents" -> measureInputs(spark, fact,
             discCents(col("l_extendedprice"), col("l_discount"))))),
       factStamp = MvRewrite.stampFor(factKey)))
-    MvRewrite.install(spark)
   }
 
   private def mvSnowflake(spark: SparkSession, dir: String): DataFrame = {

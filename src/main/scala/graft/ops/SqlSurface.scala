@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions._
 import graft.polarify.Corpus
 import graft.Gate
 
@@ -21,7 +21,7 @@ object SqlSurface {
   private val xSql = "(CAST(l_quantity AS BIGINT) - 25)"
 
   private def signumViaSql(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerProgram(spark, "graft_signum", Seq("x"), signum)
+    registerProgram(spark, "graft_signum", Seq("x"), signum)
     spark.read.parquet(s"$dir/lineitem.parquet")
       .createOrReplaceTempView("graft_sql_lineitem")
     spark.sql(
@@ -101,7 +101,9 @@ object SqlSurface {
     * this is the third surface for the same operator after DataFrame
     * window and TopK aggregator; surfaces must agree, so ties break on
     * the same (price DESC, key ASC) total order. Identical text runs
-    * in DuckDB.
+    * in DuckDB. It plans on [[graft.Sessions.stockPlans]]: the gate
+    * shows Catalyst's own WindowGroupLimit pushdown (PlanShapeSpec),
+    * which graft's TopNPerGroup rewrite would otherwise replace.
     */
   private def lateralTemplate(part: String): String =
     s"""SELECT b.p_brand, l.p_partkey, l.price_cents
@@ -112,7 +114,8 @@ object SqlSurface {
        |  ORDER BY price_cents DESC, p_partkey ASC LIMIT 2) l
        |ORDER BY b.p_brand, l.price_cents DESC, l.p_partkey""".stripMargin
 
-  private def lateralTopkViaSql(spark: SparkSession, dir: String): DataFrame = {
+  private def lateralTopkViaSql(parent: SparkSession, dir: String): DataFrame = {
+    val spark = graft.Sessions.stockPlans(parent)
     spark.read.parquet(s"$dir/part.parquet")
       .createOrReplaceTempView("graft_sql_part")
     spark.sql(lateralTemplate("graft_sql_part"))

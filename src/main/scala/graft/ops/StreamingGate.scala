@@ -128,7 +128,9 @@ object StreamingGate {
     * call; only the input staging amortizes. `build(stage, input)`
     * runs against freshly cleared directories, so a fixture
     * regeneration restages in place; the `stage` scratch dir is
-    * deleted once `build` has moved its slices into `input`.
+    * deleted once `build` has moved its slices into `input`. A hit
+    * whose `input` is gone or empty (`sbt clean`, another process)
+    * restages too.
     *
     * One cache and one directory root per (family, fixture): a family
     * staged from two fixtures gets two inputs, each evicted when its
@@ -144,11 +146,15 @@ object StreamingGate {
     val root = s"target/$family/${fixture.stripSuffix(".parquet")}"
     val cache = stagedDirCaches.computeIfAbsent(root,
       _ => new SubstrateCache[String](fixture, _ => ()))
-    cache.get(spark, dir) {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    def staged(input: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(input)
+      fs.exists(p) && fs.listStatus(p).nonEmpty
+    }
+    cache.get(spark, dir, staged) {
       val stage = new org.apache.hadoop.fs.Path(s"$root/stage_$tag")
       val input = s"$root/input_$tag"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
       fs.delete(stage, true)
       fs.delete(new org.apache.hadoop.fs.Path(input), true)
       fs.mkdirs(new org.apache.hadoop.fs.Path(input))

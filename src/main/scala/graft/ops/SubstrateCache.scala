@@ -39,24 +39,36 @@ private[ops] final class SubstrateCache[V](fixture: String,
     * mtimes are the identical epoch millis, so local keys are
     * unchanged.
     */
-  private def stamp(spark: SparkSession, dir: String): String =
+  private def stamp(spark: SparkSession, dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir, fixture)
     try {
-      val p = new org.apache.hadoop.fs.Path(dir, fixture)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(p).getModificationTime.toString
-    } catch { case _: Exception => "absent" }
+    } catch {
+      case e: Exception =>
+        // every unstampable generation shares this key, so a fixture
+        // regeneration behind it is served stale: say so
+        SubstrateCache.log.warn(s"no generation stamp for $p ($e); " +
+          "its substrates are keyed \"absent\" and a regeneration will " +
+          "not evict them")
+        "absent"
+    }
+  }
 
   /** Evict-stale-then-compute. `build` runs at most once per key
     * (ConcurrentHashMap.computeIfAbsent); concurrent callers of a
     * superseded generation may race the eviction sweep, which is safe
     * — remove(k, v) is atomic and a lost race just defers the release
-    * to the next access.
+    * to the next access. A current-generation hit that fails `valid`
+    * (its backing storage went away) is evicted and rebuilt.
     */
-  def get(spark: SparkSession, dir: String)(build: => V): V = {
+  def get(spark: SparkSession, dir: String, valid: V => Boolean = (_: V) => true)(
+      build: => V): V = {
     val prefix = s"${spark.sparkContext.applicationId}#$dir@"
     val key = prefix + stamp(spark, dir)
     m.forEach { (k, v) =>
-      if (k != key && k.startsWith(prefix) && m.remove(k, v)) release(v)
+      if (k.startsWith(prefix) && (k != key || !valid(v)) && m.remove(k, v))
+        release(v)
     }
     m.computeIfAbsent(key, _ => build)
   }
@@ -69,6 +81,8 @@ private[ops] final class SubstrateCache[V](fixture: String,
 }
 
 private[ops] object SubstrateCache {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SubstrateCache[_]])
+
   /** Cache of single frames; release = eager unpersist (no-op for
     * checkpoint-only values — see class doc).
     */

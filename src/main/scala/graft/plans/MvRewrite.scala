@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.datasources.{
   *
   * A registered MV is an exact rollup of a base parquet table at some
   * dimension grain, with one pre-summed column per supported measure
-  * and a row-count column. [[RewriteAggToMv]] (installed per session via
-  * `spark.experimental.extraOptimizations`) matches logical
+  * and a row-count column. [[RewriteAggToMv]] (installed in every
+  * session by [[graft.functions.GraftSparkExtensions]]) matches logical
   * `Aggregate(G, aggs, scan(base))` where
   *
   *   - every grouping expression is a bare base column with name ∈ the
@@ -279,15 +279,6 @@ object MvRewrite {
           colsOf(mv.factKey, tableOf(mv.factKey)) ++
             mv.dims.flatMap(d => colsOf(d.dimKey, tableOf(d.dimKey))))
     })
-  }
-
-  /** Idempotently install the rewrite rule on a session. */
-  def install(spark: SparkSession): Unit = synchronized {
-    val already = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[RewriteAggToMv])
-    if (!already)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteAggToMv(spark)
   }
 
   /** The scan under an aggregate, if it is a registered base reached

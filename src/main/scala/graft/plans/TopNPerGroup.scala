@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -38,10 +37,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *     heap again per clustered group and a 1..k rank attach. No sort
   *     of anything bigger than k rows anywhere.
   *
-  * Installed per session via the public `spark.experimental` hooks
-  * (`extraOptimizations` + `extraStrategies`) — the runtime-injectable
-  * analogue of a `SparkSessionExtensions` registration, usable from a
-  * shared test context (same seam note as Interop.applyInjectedFunctions).
+  * Installed in every session by [[graft.functions.GraftSparkExtensions]]
+  * (through [[graft.Sessions.configure]]); a query that must keep the
+  * stock plan runs on [[graft.Sessions.stockPlans]].
   *
   * The rewrite is deliberately conservative: it fires only when the
   * filter's conjuncts are exactly the rn bound (plus the IsNotNull(rn)
@@ -52,17 +50,6 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 object TopNPerGroup {
   /** guard: a "top million per group" is not a heap workload */
   val MaxN = 10000
-
-  /** Install the rule + strategy into a session (idempotent). */
-  def ensureInstalled(spark: SparkSession): Unit = {
-    val em = spark.experimental
-    if (!em.extraOptimizations.contains(RewriteTopNPerGroup)) {
-      em.extraOptimizations = em.extraOptimizations :+ RewriteTopNPerGroup
-    }
-    if (!em.extraStrategies.contains(TopNPerGroupStrategy)) {
-      em.extraStrategies = em.extraStrategies :+ TopNPerGroupStrategy
-    }
-  }
 }
 
 case class TopNPerGroupLogical(

@@ -26,23 +26,6 @@ object Interop {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
   def column(e: Expression): Column = ExpressionUtils.column(e)
-
-  /** Test seam for `SparkSessionExtensions`-based injection:
-    * `spark.sql.extensions` is a STATIC conf, read from the
-    * SparkContext at first-session build — it cannot be exercised from
-    * a test suite sharing one context. This applies an extensions
-    * function to a fresh registry the same way session building does
-    * (`SparkSessionExtensions.registerFunctions` is private[sql], hence
-    * this lives in the shim package).
-    */
-  def applyInjectedFunctions(
-      ext: org.apache.spark.sql.SparkSessionExtensions => Unit)
-      : org.apache.spark.sql.catalyst.analysis.FunctionRegistry = {
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    ext(e)
-    e.registerFunctions(
-      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone())
-  }
 }
 
 /** Native codegen'd integer dot product over two `array<bigint>` columns.

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +52,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("dot_long works from SQL after registration and survives codegen") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT dot_long(array(1L,2L,3L), array(4L,5L,6L)) AS d").head().getLong(0)
     assert(out === 32L)
@@ -62,16 +61,20 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("GraftSparkExtensions injects dot_long into a session function registry") {
-    // spark.sql.extensions is static (read at SparkContext-first-session
-    // build), so exercise the injection the way session building does
-    val registry = org.apache.spark.sql.graft.Interop
-      .applyInjectedFunctions(new GraftSparkExtensions)
-    val fn = registry.lookupFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("dot_long"),
-      Seq(lit(Array(2L, 3L)), lit(Array(4L, 5L))).map(
-        org.apache.spark.sql.graft.Interop.expression))
-    assert(fn.isInstanceOf[org.apache.spark.sql.graft.DotProductLong])
-    assert(fn.eval(null) === 23L)
+    // the shared test session is built through Sessions.configure, so
+    // its registry carries the injected functions and spark.experimental
+    // stays empty: the extensions are the only install path
+    val registry = SparkTestSession.spark.sessionState.functionRegistry
+    def lookup(name: String, args: Column*) = registry.lookupFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      args.map(org.apache.spark.sql.graft.Interop.expression))
+    val dot = lookup("dot_long", lit(Array(2L, 3L)), lit(Array(4L, 5L)))
+    assert(dot.isInstanceOf[org.apache.spark.sql.graft.DotProductLong])
+    assert(dot.eval(null) === 23L)
+    assert(lookup("graft_hash60", lit("abc"))
+      .isInstanceOf[org.apache.spark.sql.graft.Md5Hash60])
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.experimental.extraStrategies.isEmpty)
   }
 
   test("GraftSparkExtensions applies cleanly with the optimizer-tier injections") {

@@ -108,4 +108,43 @@ class SubstrateCacheSpec extends AnyFunSuite {
     assert(p1.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
     assert(p2.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
   }
+
+  test("a missing fixture stamps \"absent\" and logs a WARN naming its path") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender("substrate-cache-spec", null, null,
+        true, Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[SubstrateCache[_]]).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      val dir = tempFixtureDir() // no fix.parquet in it
+      val cache = new SubstrateCache[Int]("fix.parquet", _ => ())
+      assert(cache.get(spark, dir.toString)(1) === 1)
+      assert(cache.liveKeys.forall(_.endsWith("@absent")), cache.liveKeys)
+      val missing = new java.io.File(dir, "fix.parquet").toString
+      assert(warnings.size === 1, warnings)
+      assert(warnings.get(0).contains(missing), warnings)
+      assert(warnings.get(0).contains("FileNotFoundException"), warnings)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
+  test("a hit that fails its validity check is evicted and rebuilt") {
+    val dir = tempFixtureDir(); touch(dir, 1000000L)
+    val cache = new SubstrateCache[String]("fix.parquet", _ => ())
+    var builds = 0
+    def build() = { builds += 1; s"v$builds" }
+    assert(cache.get(spark, dir.toString)(build()) === "v1")
+    assert(cache.get(spark, dir.toString, (_: String) => true)(build()) === "v1")
+    assert(cache.get(spark, dir.toString, (_: String) => false)(build()) === "v2")
+    assert(cache.liveKeys.size === 1)
+  }
 }

@@ -171,7 +171,6 @@ class MvRewriteSpec extends AnyFunSuite {
         dims = Seq("l_returnflag"), measures = Seq("mv_q" -> templ),
         countCol = "mv_n", mvPath = mvPath,
         baseStamp = MvRewrite.stampFor(key)))
-      MvRewrite.install(spark)
       def q = spark.read.parquet(basePath)
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_quantity").cast("long")).as("q"))
@@ -335,7 +334,6 @@ class MvRewriteSpec extends AnyFunSuite {
           countCol = "mv_n", mvPath = mvPath),
         factStamp = MvRewrite.stampFor(factKey),
         dimStamp = MvRewrite.stampFor(dimKey)))
-      MvRewrite.install(spark)
       def q = spark.read.parquet(factPath)
         .join(spark.read.parquet(dimPath),
           col("l_orderkey") === col("o_orderkey"))
@@ -523,7 +521,6 @@ class MvRewriteSpec extends AnyFunSuite {
           dims = Seq("l_orderkey"), // l_partkey NOT in the grain
           measures = Nil, countCol = "mv_n_rows",
           mvPath = s"$dir/lineitem.parquet")))
-      MvRewrite.install(spark)
       val df = snowJoined.groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"))
       val p = planOf(df)
@@ -651,7 +648,6 @@ class MvRewriteSpec extends AnyFunSuite {
         joinFactCol = "fk", joinDimCol = "pk",
         serve = MvRewrite.MvDef(dims = Seq("fk"), measures = Nil,
           countCol = "mv_n_rows", mvPath = mvP)))
-      MvRewrite.install(spark)
       val fact = spark.read.parquet(factP)
       val dim = spark.read.parquet(dimP)
       val joined = fact.join(dim, col("fk") === col("pk"))

@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopNPerGroupSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    TopNPerGroup.ensureInstalled(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   private def topkDf(k: Int): DataFrame = {

@@ -52,4 +52,14 @@ class LateDropSpec extends AnyFunSuite {
     assert(input != null && input.exists(_.getName.endsWith(".parquet")),
       "the staged input dir holds no slice")
   }
+
+  test("a staged input removed mid-session is restaged on the next run") {
+    SparkEntry.queries("st_late_drop")(spark, dir).collect()
+    val input = new java.io.File("target/stream_late/events/input_sf0_001")
+    org.apache.commons.io.FileUtils.deleteDirectory(input)
+    SparkEntry.queries("st_late_drop")(spark, dir).collect()
+    val slices = input.listFiles()
+    assert(slices != null && slices.exists(_.getName.endsWith(".parquet")),
+      "the staged input dir was not restaged")
+  }
 }

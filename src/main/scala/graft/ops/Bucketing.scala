@@ -26,49 +26,41 @@ object Bucketing {
 
   val Buckets = 16
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   /** write both sides bucketed by the join key, return (lineitem, orders).
-    * External tables under target/ — the on-disk layout outlives the
-    * in-memory catalog, so a fresh JVM that finds a completed layout
-    * (_SUCCESS) RE-REGISTERS the catalog entry over the existing
+    * External tables over a [[FixtureCache.layout]] keyed by the bucket
+    * spec and the source's generation. A fresh JVM that finds the
+    * completed layout RE-REGISTERS the catalog entry over the existing
     * bucketed files (CREATE TABLE ... CLUSTERED BY ... LOCATION)
-    * instead of rewriting them — the ingest cost is paid once per SF,
-    * not once per JVM. The bucket spec must match the one the files
-    * were written with; both come from the same constants here.
+    * instead of rewriting them — the ingest cost is paid once per
+    * source generation, not once per JVM. The table name carries the
+    * layout's directory name (SF tag and fingerprint), so a changed
+    * bucket spec or a regenerated source re-ingests under a new name
+    * instead of re-registering a stale layout or a mismatched
+    * CLUSTERED BY spec.
     */
   def bucketedTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val tag = new java.io.File(dir).getName.replace('.', '_')
-    // table name and path fingerprint the bucket spec: a changed bucket
-    // count or key must re-ingest, never re-register a stale layout
-    // under a mismatched CLUSTERED BY spec
     def ensure(table0: String, source: String, key: String): DataFrame = {
-      val table =
-        s"${table0}_${FixtureCache.fingerprint("buckets" -> Buckets, "key" -> key)}"
+      def tableAt(path: String) = s"${table0}_${new java.io.File(path).getName}"
+      val path = FixtureCache.layout(spark, "bucketed_tables", dir,
+          Seq(s"$source.parquet"), "buckets" -> Buckets, "key" -> key) { path =>
+        spark.read.parquet(s"$dir/$source.parquet")
+          .write.bucketBy(Buckets, key).sortBy(key)
+          .option("path", path)
+          .mode("overwrite").saveAsTable(tableAt(path))
+      }
+      val table = tableAt(path)
       if (!spark.catalog.tableExists(table)) {
-        val path = new java.io.File(s"target/bucketed_tables/$table").getAbsoluteFile
-        if (new java.io.File(path, "_SUCCESS").exists()) {
-          val ddl = spark.read.parquet(path.toString).schema.toDDL
-          spark.sql(
-            s"""CREATE TABLE $table ($ddl) USING parquet
-               |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
-               |LOCATION '$path'""".stripMargin)
-        } else {
-          deleteRecursively(path)
-          spark.read.parquet(s"$dir/$source.parquet")
-            .write.bucketBy(Buckets, key).sortBy(key)
-            .option("path", path.toString)
-            .mode("overwrite").saveAsTable(table)
-        }
+        val ddl = spark.read.parquet(path).schema.toDDL
+        spark.sql(
+          s"""CREATE TABLE $table ($ddl) USING parquet
+             |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
+             |LOCATION '$path'""".stripMargin)
       }
       spark.table(table)
     }
 
-    (ensure(s"graft_li_bkt_$tag", "lineitem", "l_orderkey"),
-      ensure(s"graft_ord_bkt_$tag", "orders", "o_orderkey"))
+    (ensure("graft_li_bkt", "lineitem", "l_orderkey"),
+      ensure("graft_ord_bkt", "orders", "o_orderkey"))
   }
 
   /** the co-located join itself (pre-aggregation), for plan assertions */

@@ -16,25 +16,19 @@ import graft.Gate
   */
 object Dsv2Source {
 
-  /** documents metadata as multi-file TSV, written once per SF */
-  def tsvFixturePath(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "documents.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("dsv2_lines", dir, "v" -> 1, "src" -> stamp)
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  /** documents metadata as multi-file TSV, written once per documents
+    * generation
+    */
+  def tsvFixturePath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "dsv2_lines", dir, Seq("documents.parquet"),
+        "v" -> 1) { path =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(concat_ws("\t",
           col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .as("value"))
         .repartition(4)
-        .write.mode("overwrite").text(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").text(path)
     }
-    pathF.toString
-  }
 
   def linesRead(spark: SparkSession, dir: String): DataFrame =
     spark.read.format(classOf[graft.sources.GraftLines].getName)
@@ -176,26 +170,18 @@ object Dsv2Source {
   // as a hash mismatch; Dsv2SourceSpec pins that pruning actually
   // happened (files-planned probe + the plan's runtime filter).
   // -------------------------------------------------------------------
-  def dppFixturePath(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "documents.parquet")).toMillis
-      catch { case _: Exception => 0L }
+  def dppFixturePath(spark: SparkSession, dir: String): String =
     // v2: the sidecar carries row counts (aggregate pushdown needs them)
-    val pathF = FixtureCache.dir("dsv2_dpp", dir, "v" -> 2, "src" -> stamp)
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+    FixtureCache.layout(spark, "dsv2_dpp", dir, Seq("documents.parquet"),
+        "v" -> 2) { path =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartitionByRange(8, col("doc_id"))
         .write.format(classOf[graft.sources.GraftLines].getName)
-        .option("path", pathF.toString)
+        .option("path", path)
         .mode("overwrite")
         .save()
-      marker.createNewFile()
     }
-    pathF.toString
-  }
 
   private def dsv2Dpp(spark: SparkSession, dir: String): DataFrame = {
     val path = dppFixturePath(spark, dir)

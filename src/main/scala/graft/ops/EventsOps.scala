@@ -600,29 +600,19 @@ object EventsOps {
   // -------------------------------------------------------------------
   /** The user-range-bucketed events layout shared by ax_manifest_prune
     * and ax_manifest_bloom — a table's layout is written once, not per
-    * query. Disk fixture keyed by the bucket width AND the source
-    * mtime (regeneration rebuilds).
+    * query. Disk layout keyed by the bucket width AND the events
+    * generation (regeneration rebuilds).
     */
-  private def bucketedEventsLayout(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "events.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("events_manifest", dir,
-      "bucketWidth" -> 4, "src" -> stamp)
-    val path = pathF.toString
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def bucketedEventsLayout(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "events_manifest", dir, Seq("events.parquet"),
+        "bucketWidth" -> 4) { path =>
       graft.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents"))
         .withColumn("bucket", expr("user_id div 4"))
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      marker.createNewFile()
     }
-    path
-  }
 
   private def manifestPrune(spark: SparkSession, dir: String): DataFrame = {
     val path = bucketedEventsLayout(spark, dir)
@@ -704,15 +694,12 @@ object EventsOps {
   private def bloomManifest(spark: SparkSession, dir: String,
       layoutPath: String): Array[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.graft.Sketches
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "events.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val mDirF = FixtureCache.dir("events_bloom_manifest", dir,
-      "bucketWidth" -> 4, "minBits" -> 17, "src" -> stamp)
-    val mDir = mDirF.toString
-    val marker = new java.io.File(mDirF, "_GRAFT_SUCCESS")
-    def build(): Unit = {
+    // the manifest references layout part files by ABSOLUTE path, so it
+    // is keyed by the layout's location AND its part-file stamp: a
+    // layout rebuilt or moved rebuilds the manifest, and the rows never
+    // point at dead files
+    val mDir = FixtureCache.layout(spark, "events_bloom_manifest", dir,
+        Seq(layoutPath), "layout" -> layoutPath, "minBits" -> 17) { mDir =>
       val estItems = math.max(1L,
         spark.read.parquet(layoutPath)
           .groupBy(input_file_name().as("file"))
@@ -727,26 +714,8 @@ object EventsOps {
             .as("bf"))
         .coalesce(1) // O(files) KB-scale manifest rows — one blob file
         .write.mode("overwrite").parquet(mDir)
-      marker.createNewFile()
     }
-    if (!marker.exists()) build()
-    var rows = spark.read.parquet(mDir).collect() // O(files) manifest rows
-    // the manifest references layout part files by ABSOLUTE path, and
-    // its own marker is independent of the layout's: a layout rebuilt
-    // under the same source stamp (fresh part-file UUIDs) would leave
-    // the cached manifest validating but pointing at dead files — so
-    // the read path checks liveness (O(files) stat calls, the same
-    // existence check a table-format coordinator performs) and
-    // rebuilds from the live layout on any miss.
-    def pathOf(r: org.apache.spark.sql.Row): String = {
-      val f = r.getString(0)
-      if (f.startsWith("file:")) new java.net.URI(f).getPath else f
-    }
-    if (rows.exists(r => !new java.io.File(pathOf(r)).exists())) {
-      build()
-      rows = spark.read.parquet(mDir).collect()
-    }
-    rows
+    spark.read.parquet(mDir).collect() // O(files) manifest rows
   }
 
   private def manifestBloom(spark: SparkSession, dir: String): DataFrame = {
@@ -802,14 +771,8 @@ object EventsOps {
   // logical table — layouts are physical, answers are not.
   // -------------------------------------------------------------------
   private def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "events.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("events_part_evo", dir, "src" -> stamp)
-    val base = pathF.toString
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+    val base = FixtureCache.layout(spark, "events_part_evo", dir,
+        Seq("events.parquet")) { base =>
       val ev = graft.Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -820,7 +783,6 @@ object EventsOps {
         .repartition(col("event_type"))
         .write.mode("overwrite").partitionBy("event_type")
         .parquet(s"$base/v2")
-      marker.createNewFile()
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -897,16 +859,14 @@ object EventsOps {
   // for quarantine/replay, and the audit counts both populations in
   // one pass. The fixture manufactures the corruption deterministically
   // (odd event ids become truncated JSON) so the oracle replays the
-  // split from the source table; it is written once per SF behind a
-  // _SUCCESS check (same convention as the DPP/ANN layouts) — the
+  // split from the source table; it is written once per events
+  // generation and corruption scheme as a FixtureCache.layout — the
   // query's cost is the PERMISSIVE scan, not fixture write
   // amplification.
   // -------------------------------------------------------------------
   private def corruptIngest(spark: SparkSession, dir: String): DataFrame = {
-    // path fingerprints the corruption scheme (stale-fixture guard)
-    val path = FixtureCache.dir("corrupt_json", dir,
-      "scheme" -> "odd-truncated-json;cents")
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val path = FixtureCache.layout(spark, "corrupt_json", dir,
+        Seq("events.parquet"), "scheme" -> "odd-truncated-json;cents") { path =>
       graft.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -915,13 +875,13 @@ object EventsOps {
             to_json(struct(col("event_id"), col("user_id"), col("cents"))))
             .otherwise(concat(lit("{\"event_id\": "), col("event_id"),
               lit(", BROKEN"))).as("value"))
-        .write.mode("overwrite").text(path.toString)
+        .write.mode("overwrite").text(path)
     }
     spark.read
       .schema("event_id BIGINT, user_id BIGINT, cents BIGINT, _corrupt STRING")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(path.toString)
+      .json(path)
       .agg(count(lit(1)).as("n_lines"),
         sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L)).as("n_quarantined"),
         sum(when(col("_corrupt").isNull, 1L).otherwise(0L)).as("n_parsed"),

@@ -31,8 +31,8 @@ object Lifecycle {
   /** count the data files of a parquet directory (driver-side metadata
     * listing — the same information a catalog/manifest serves for free)
     */
-  private def parquetFileCount(path: java.io.File): Long =
-    Option(path.listFiles())
+  private def parquetFileCount(path: String): Long =
+    Option(new java.io.File(path).listFiles())
       .map(_.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
 
   // -------------------------------------------------------------------
@@ -53,25 +53,22 @@ object Lifecycle {
   private val FragFiles = 64
   private val CompactTarget = 4
 
-  private def fragmentedPath(spark: SparkSession, dir: String): java.io.File = {
-    val path = FixtureCache.dir("compact_frag", dir, "files" -> FragFiles)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private def fragmentedPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "compact_frag", dir, Seq("orders.parquet"),
+        "files" -> FragFiles) { path =>
       ordersKc(spark, dir).repartition(FragFiles)
-        .write.mode("overwrite").parquet(path.toString)
+        .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   private def compactFiles(spark: SparkSession, dir: String): DataFrame = {
     val frag = fragmentedPath(spark, dir)
-    val comp = FixtureCache.dir("compact_out", dir,
-      "files" -> FragFiles, "target" -> CompactTarget)
-    if (!new java.io.File(comp, "_SUCCESS").exists()) {
-      spark.read.parquet(frag.toString).repartition(CompactTarget)
-        .write.mode("overwrite").parquet(comp.toString)
+    val comp = FixtureCache.layout(spark, "compact_out", dir, Seq(frag),
+        "files" -> FragFiles, "target" -> CompactTarget) { comp =>
+      spark.read.parquet(frag).repartition(CompactTarget)
+        .write.mode("overwrite").parquet(comp)
     }
     val h = PortableHash.hashCol(concat_ws("|", col("k"), col("cents")))
-    spark.read.parquet(comp.toString)
+    spark.read.parquet(comp)
       .select(h.as("h"))
       .agg(count(lit(1)).as("n_rows"),
         expr("bit_xor(h)").as("xor_fp"),
@@ -110,10 +107,9 @@ object Lifecycle {
   // integer change rules (delete k%83, update k%91 at +3 cents, insert
   // k+max(k) at k%101 — exact at any SF).
   // -------------------------------------------------------------------
-  private[ops] def tableLogPath(spark: SparkSession, dir: String): java.io.File = {
-    val path = FixtureCache.dir("tlog", dir,
-      "del" -> 83, "upd" -> 91, "ins" -> 101, "cmp" -> 3)
-    if (!new java.io.File(path, "_COMMITTED").exists()) {
+  private[ops] def tableLogPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "tlog", dir, Seq("orders.parquet"),
+        "del" -> 83, "upd" -> 91, "ins" -> 101, "cmp" -> 3) { path =>
       val base = ordersKc(spark, dir)
       base.write.mode("overwrite").parquet(s"$path/v1_base")
       base.filter(pmod(col("k"), lit(83)) === 0 || pmod(col("k"), lit(91)) === 0)
@@ -145,14 +141,10 @@ object Lifecycle {
       java.nio.file.Files.write(
         new java.io.File(path, "manifest.json").toPath,
         manifest.getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        new java.io.File(path, "_COMMITTED").toPath, Array.emptyByteArray)
     }
-    path
-  }
 
   /** plan the read of one version from the manifest row */
-  private[ops] def asOf(spark: SparkSession, log: java.io.File,
+  private[ops] def asOf(spark: SparkSession, log: String,
       version: Long): DataFrame = {
     val commits = spark.read.json(s"$log/manifest.json")
       .filter(col("version") === version)
@@ -264,23 +256,20 @@ object Lifecycle {
   private val Shards = 16
   private val ShardSalt = "shard7|"
 
-  private def shardExportPath(spark: SparkSession, dir: String): java.io.File = {
-    val path = FixtureCache.dir("shard_export", dir,
-      "shards" -> Shards, "salt" -> ShardSalt)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private[ops] def shardExportPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "shard_export", dir, Seq("documents.parquet"),
+        "shards" -> Shards, "salt" -> ShardSalt) { path =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("n_chars"),
           pmod(PortableHash.hashCol(concat(lit(ShardSalt), col("doc_id"))),
             lit(Shards.toLong)).as("shard"))
         .repartition(Shards, col("shard"))
-        .write.partitionBy("shard").mode("overwrite").parquet(path.toString)
+        .write.partitionBy("shard").mode("overwrite").parquet(path)
     }
-    path
-  }
 
   private def shardExport(spark: SparkSession, dir: String): DataFrame = {
     val h = PortableHash.hashCol(concat_ws("|", col("doc_id"), col("n_chars")))
-    spark.read.parquet(shardExportPath(spark, dir).toString)
+    spark.read.parquet(shardExportPath(spark, dir))
       .select(col("shard").cast("long").as("shard"),
         col("n_chars"), h.as("h"))
       .groupBy("shard")

@@ -355,23 +355,15 @@ object Lineage {
   private def dsv2LineageFixture(
       spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.concat_ws
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "documents.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val root = FixtureCache.dir("dsv2_lineage", dir,
-      "v" -> 1, "src" -> stamp)
-    val pathF = new java.io.File(root.toString, "docs_meta")
-    val marker = new java.io.File(root.toString, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+    val root = FixtureCache.layout(spark, "dsv2_lineage", dir,
+        Seq("documents.parquet"), "v" -> 1) { root =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(concat_ws("\t", col("doc_id"), col("lang"),
           col("source"), col("n_chars")).as("value"))
         .repartition(2)
-        .write.mode("overwrite").text(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").text(s"$root/docs_meta")
     }
-    pathF.toString
+    s"$root/docs_meta"
   }
 
   private[ops] def dsv2LineageQuery(

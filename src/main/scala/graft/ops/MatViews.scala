@@ -11,8 +11,8 @@ import graft.Gate
 /** Materialized-view serving over the lineitem fact (SURVEY.md §2b
   * maintenance/storage tier + the plans/MvRewrite optimizer rule).
   *
-  * The rollup is built ONCE per SF as a disk fixture (write-once
-  * marker, mtime-keyed) at the (l_returnflag, l_linestatus) grain with
+  * The rollup is built ONCE per source generation as a disk layout
+  * ([[FixtureCache.layout]]) at the (l_returnflag, l_linestatus) grain with
   * two pre-summed measures and the row count; the gate query then asks
   * the RAW table the coarser l_returnflag question, and the installed
   * rewrite rule serves it from the rollup — MvRewriteSpec pins that the
@@ -33,15 +33,9 @@ object MatViews {
     round(price * (lit(1.0) - disc) * 100).cast("long")
 
   /** Write-once (l_returnflag, l_linestatus) rollup fixture. */
-  private def mvLineitemPath(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "lineitem.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("mv_lineitem", dir,
-      "grain" -> "rf_ls", "v" -> 2, "src" -> stamp)
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvLineitemPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "mv_lineitem", dir, Seq("lineitem.parquet"),
+        "grain" -> "rf_ls", "v" -> 2) { path =>
       spark.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -52,11 +46,8 @@ object MatViews {
           min(qtyLong(col("l_quantity"))).as("mv_min_qty"),
           count(lit(1)).as("mv_n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   /** The name-normalized OPTIMIZED form of a measure Column over the
     * base table — exactly what the rule will see under `sum(...)` in a
@@ -181,23 +172,14 @@ object MatViews {
   // -------------------------------------------------------------------
   private[ops] val DeltaCut = "2001-06-01"
 
-  private[ops] def mvPreCutPath(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "lineitem.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("mv_lineitem_pre", dir,
-      "grain" -> "rf_ls", "cut" -> DeltaCut, "v" -> 1, "src" -> stamp)
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private[ops] def mvPreCutPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "mv_lineitem_pre", dir, Seq("lineitem.parquet"),
+        "grain" -> "rf_ls", "cut" -> DeltaCut, "v" -> 1) { path =>
       rollup(spark.read.parquet(s"$dir/lineitem.parquet")
           .filter(col("l_shipdate") < lit(DeltaCut)))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   /** the (l_returnflag, l_linestatus) rollup of a lineitem slice */
   private[ops] def rollup(li: DataFrame): DataFrame = li
@@ -242,22 +224,13 @@ object MatViews {
   // conjuncts the optimizer infers — anything else falls back to raw.
   // The oracle computes the same answer from the raw join.
   // -------------------------------------------------------------------
-  /** mtime of one base table, 0 when unreadable — fixture keys must
-    * include EVERY base the fixture embeds (fact AND dim), or a
-    * regenerated dim silently serves stale attributes from the cache.
+  /** The fixture is keyed by EVERY base it embeds (fact AND dim), or a
+    * regenerated dim would silently serve stale attributes.
     */
-  private def baseStamp(dir: String, table: String): Long =
-    try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(dir, table)).toMillis
-    catch { case _: Exception => 0L }
-
-  private def mvStarPath(spark: SparkSession, dir: String): String = {
-    val pathF = FixtureCache.dir("mv_star", dir,
-      "grain" -> "op_rf", "v" -> 2,
-      "src" -> baseStamp(dir, "lineitem.parquet"),
-      "dim" -> baseStamp(dir, "orders.parquet"))
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvStarPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "mv_star", dir,
+        Seq("lineitem.parquet", "orders.parquet"),
+        "grain" -> "op_rf", "v" -> 2) { path =>
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
       val ord = spark.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -269,11 +242,8 @@ object MatViews {
             .as("mv_disc_cents"),
           count(lit(1)).as("mv_n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   private[ops] def serveStarFromMv(
       spark: SparkSession, dir: String): Unit = {
@@ -346,14 +316,11 @@ object MatViews {
   // determine dim attributes, so the same query with only the op_rf
   // MV registered keeps its raw plan.
   // -------------------------------------------------------------------
-  private def mvStarFkPath(spark: SparkSession, dir: String): String = {
-    // fact mtime only: the FK rollup reads ONLY lineitem (the dim is
-    // re-joined live at serve time, so dim regeneration never stales it)
-    val pathF = FixtureCache.dir("mv_star_fk", dir,
-      "grain" -> "okey", "v" -> 1,
-      "src" -> baseStamp(dir, "lineitem.parquet"))
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvStarFkPath(spark: SparkSession, dir: String): String =
+    // fact only: the FK rollup reads ONLY lineitem (the dim is re-joined
+    // live at serve time, so dim regeneration never stales it)
+    FixtureCache.layout(spark, "mv_star_fk", dir, Seq("lineitem.parquet"),
+        "grain" -> "okey", "v" -> 1) { path =>
       spark.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_orderkey"))
         .agg(
@@ -362,11 +329,8 @@ object MatViews {
             .as("mv_disc_cents"),
           count(lit(1)).as("mv_n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   private[ops] def serveStarFkFromMv(
       spark: SparkSession, dir: String): Unit = {
@@ -396,7 +360,7 @@ object MatViews {
           "mv_disc_cents" -> measureInputs(spark, fact,
             discCents(col("l_extendedprice"), col("l_discount"))))),
       factStamp = MvRewrite.stampFor(factKey),
-      dimStamp = 0L)) // live-dim serving: dim freshness is a non-issue
+      dimStamp = "")) // live-dim serving: dim freshness is a non-issue
   }
 
   private def mvStarAttr(spark: SparkSession, dir: String): DataFrame = {
@@ -440,13 +404,10 @@ object MatViews {
   // side-of-origin (leaf exprIds), so same-named fact/dim columns can
   // never silently remap.
   // -------------------------------------------------------------------
-  private def mvSnowPath(spark: SparkSession, dir: String): String = {
-    // fact mtime only: the composite-FK rollup reads ONLY lineitem
-    val pathF = FixtureCache.dir("mv_snow_fk", dir,
-      "grain" -> "okey_pkey", "v" -> 1,
-      "src" -> baseStamp(dir, "lineitem.parquet"))
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvSnowPath(spark: SparkSession, dir: String): String =
+    // fact only: the composite-FK rollup reads ONLY lineitem
+    FixtureCache.layout(spark, "mv_snow_fk", dir, Seq("lineitem.parquet"),
+        "grain" -> "okey_pkey", "v" -> 1) { path =>
       spark.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_orderkey"), col("l_partkey"))
         .agg(
@@ -455,11 +416,8 @@ object MatViews {
             .as("mv_disc_cents"),
           count(lit(1)).as("mv_n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   private[ops] def serveSnowFromMv(
       spark: SparkSession, dir: String): Unit = {
@@ -534,22 +492,16 @@ object MatViews {
   // partitions, not the join. The oracle computes the full-join rollup
   // directly, proving the incremental path lands on the batch answer.
   // -------------------------------------------------------------------
-  private def mvStarPrePath(spark: SparkSession, dir: String): String = {
-    val pathF = FixtureCache.dir("mv_star_pre", dir,
-      "grain" -> "op_rf", "cut" -> DeltaCut, "v" -> 2,
-      "src" -> baseStamp(dir, "lineitem.parquet"),
-      "dim" -> baseStamp(dir, "orders.parquet"))
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvStarPrePath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "mv_star_pre", dir,
+        Seq("lineitem.parquet", "orders.parquet"),
+        "grain" -> "op_rf", "cut" -> DeltaCut, "v" -> 2) { path =>
       starRollup(spark, dir,
         spark.read.parquet(s"$dir/lineitem.parquet")
           .filter(col("l_shipdate") < lit(DeltaCut)))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   /** the (o_orderpriority, l_returnflag) join-grain rollup of a
     * lineitem slice: ONE broadcast dim join to acquire the grain, then
@@ -692,26 +644,17 @@ object MatViews {
         col("o_orderpriority").as("pri"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
 
-  private def mvCdcStoredPath(spark: SparkSession, dir: String): String = {
-    val stamp =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(dir, "orders.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    val pathF = FixtureCache.dir("mv_orders_cdc", dir,
-      "grain" -> "pri", "v" -> 1, "src" -> stamp)
-    val marker = new java.io.File(pathF, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private def mvCdcStoredPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "mv_orders_cdc", dir, Seq("orders.parquet"),
+        "grain" -> "pri", "v" -> 1) { path =>
       ordersBase(spark, dir)
         .groupBy(col("pri"))
         .agg(sum(col("cents")).as("mv_cents"),
           count(lit(1)).as("mv_n"),
           max(col("cents")).as("mv_max"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(pathF.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(path)
     }
-    pathF.toString
-  }
 
   /** the deterministic I/U/D log over orders (ax_cdc_apply's classes,
     * deletes grain-restricted); deletes carry the key only. On top of

@@ -121,8 +121,9 @@ object Multimodal {
   // source — the shape a real image corpus actually arrives in (a
   // directory of blobs, not a parquet column). A deterministic ~2%
   // keyed-hash sample of documents is materialized as real .img files
-  // once per SF (foreachPartition writer, marker-gated; on a cluster
-  // the writer targets shared storage — the code is identical);
+  // once per documents generation (foreachPartition writer, a
+  // FixtureCache.layout; on a cluster the writer targets shared
+  // storage — the code is identical);
   // `spark.read.format("binaryFile")` lists and reads them in
   // parallel, doc_id recovers from the file NAME, and the headers
   // decode through the same fixed-offset codec as mm_decode_stats.
@@ -134,14 +135,11 @@ object Multimodal {
 
   private def binaryAssetDir(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    // path fingerprints the sample modulus and payload codec shape so a
-    // constant change rebuilds the asset dir (stale-fixture guard)
-    val path = FixtureCache.dir("mm_assets", dir,
-      "mod" -> BinarySampleMod, "codec" -> "png8/bmp24;dim509")
-    val marker = new java.io.File(path, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
-      path.mkdirs()
-      val pathStr = path.toString
+    // keyed by the sample modulus and payload codec shape, so a constant
+    // change rebuilds the asset dir (stale-fixture guard)
+    FixtureCache.layout(spark, "mm_assets", dir, Seq("documents.parquet"),
+        "mod" -> BinarySampleMod, "codec" -> "png8/bmp24;dim509") { pathStr =>
+      new java.io.File(pathStr).mkdirs()
       spark.read.parquet(s"$dir/documents.parquet")
         .filter(pmod(PortableHash.hashCol(concat(lit("mmbin:"), col("doc_id"))),
           lit(BinarySampleMod)) === 0)
@@ -155,9 +153,7 @@ object Multimodal {
               java.nio.file.Paths.get(s"$pathStr/$id.img"), bytes)
           }
         }
-      marker.createNewFile()
     }
-    path.toString
   }
 
   private def binarySource(spark: SparkSession, dir: String): DataFrame = {

@@ -36,20 +36,16 @@ object ScanPruning {
   // ax_dpp_prune
   // -------------------------------------------------------------------
 
-  /** Hive-style layout partitioned by the join key, written once per SF
-    * under target/ (ingest cost, paid once — same convention as
-    * [[Bucketing]]).
+  /** Hive-style layout partitioned by the join key, written once per
+    * customer generation and partition column (a [[FixtureCache.layout]];
+    * ingest cost, paid once).
     */
-  def partitionedCustomerPath(spark: SparkSession, dir: String): String = {
-    // path fingerprints the partition column (stale-fixture guard)
-    val path = FixtureCache.dir("dpp_tables", dir, "pcol" -> "c_nationkey")
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  def partitionedCustomerPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "dpp_tables", dir, Seq("customer.parquet"),
+        "pcol" -> "c_nationkey") { path =>
       spark.read.parquet(s"$dir/customer.parquet")
-        .write.partitionBy("c_nationkey").mode("overwrite")
-        .parquet(path.toString)
+        .write.partitionBy("c_nationkey").mode("overwrite").parquet(path)
     }
-    path.toString
-  }
 
   /** the pruned join itself (pre-aggregation), for plan assertions:
     * customer scan must carry `PartitionFilters: [dynamicpruning#…]`.

@@ -772,25 +772,20 @@ object Similarity {
   // the shared physical ANN layout: the 6-plane LSH signature (64
   // cells, sized so cells stay non-trivial at test SF; at 10^9 vectors
   // you'd use 16-20 planes) as a parquet PARTITION column, written once
-  // per SF under target/ behind a _SUCCESS check (ingest cost, paid
-  // once — same convention as [[ScanPruning.partitionedCustomerPath]]).
+  // per embeddings generation as a FixtureCache.layout (ingest cost,
+  // paid once). Changing the plane count or the quantization rebuilds
+  // it instead of silently reusing a stale one.
   // -------------------------------------------------------------------
   private val BucketedPlanes = 6
 
-  private def annLayoutPath(spark: SparkSession, dir: String): String = {
-    // path fingerprints the generator params: changing the plane count
-    // or the quantization rebuilds the layout instead of silently
-    // reusing a stale one
-    val path = FixtureCache.dir("ann_layout", dir,
-      "planes" -> BucketedPlanes, "quantize" -> quantize)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private def annLayoutPath(spark: SparkSession, dir: String): String =
+    FixtureCache.layout(spark, "ann_layout", dir, Seq("embeddings.parquet"),
+        "planes" -> BucketedPlanes, "quantize" -> quantize) { path =>
       emb(spark, dir)
         .withColumn("q", expr(quantize))
         .withColumn("bucket", bucketCol(BucketedPlanes))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path.toString)
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
     }
-    path.toString
-  }
 
   /** query vector's (quantized vector, bucket) — a driver-side point
     * read of ONE partition-pruned row, not a data loop

@@ -8,9 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * assignment, verified near-dup pairs, BPE merges, ranked spend).
   *
   * Key = application × SF dir × fixture generation, where the
-  * generation is the source parquet's mtime: a mid-application
-  * testdata regeneration (the round-5 driver did exactly this) must
-  * recompute, never silently serve substrates of the replaced data.
+  * generation is [[FixtureCache.stamp]] of the source fixture (its
+  * part-file manifest, on any Hadoop FS): a mid-application testdata
+  * regeneration must recompute, never silently serve substrates of the
+  * replaced data. An unstampable fixture is keyed
+  * [[FixtureCache.Absent]] with one WARN.
   * On each access, entries for the same (application, dir) under a
   * different stamp are REMOVED and RELEASED before the current
   * generation is looked up, so a long-lived session that sees fixture
@@ -26,34 +28,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale note: the cache holds O(generations-in-flight) = 1 entry per
   * (application, dir) by construction; the map itself is metadata.
+  *
+  * Each build logs one INFO line (fixture, dir, seconds) and each
+  * eviction one more; hits are not logged.
   */
 private[ops] final class SubstrateCache[V](fixture: String,
     release: V => Unit) {
 
   private val m = new java.util.concurrent.ConcurrentHashMap[String, V]
-
-  /** Generation stamp via the SAME Hadoop FileSystem the operators use
-    * for sizing (round-14 advice): java.nio only resolves local paths,
-    * so on object-store dirs every generation stamped "absent" and
-    * stale substrates survived fixture regeneration. Hadoop local-FS
-    * mtimes are the identical epoch millis, so local keys are
-    * unchanged.
-    */
-  private def stamp(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, fixture)
-    try {
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime.toString
-    } catch {
-      case e: Exception =>
-        // every unstampable generation shares this key, so a fixture
-        // regeneration behind it is served stale: say so
-        SubstrateCache.log.warn(s"no generation stamp for $p ($e); " +
-          "its substrates are keyed \"absent\" and a regeneration will " +
-          "not evict them")
-        "absent"
-    }
-  }
 
   /** Evict-stale-then-compute. `build` runs at most once per key
     * (ConcurrentHashMap.computeIfAbsent); concurrent callers of a
@@ -65,12 +47,21 @@ private[ops] final class SubstrateCache[V](fixture: String,
   def get(spark: SparkSession, dir: String, valid: V => Boolean = (_: V) => true)(
       build: => V): V = {
     val prefix = s"${spark.sparkContext.applicationId}#$dir@"
-    val key = prefix + stamp(spark, dir)
+    val key = prefix + FixtureCache.stamp(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(dir, fixture).toString)
     m.forEach { (k, v) =>
-      if (k.startsWith(prefix) && (k != key || !valid(v)) && m.remove(k, v))
+      if (k.startsWith(prefix) && (k != key || !valid(v)) && m.remove(k, v)) {
         release(v)
+        SubstrateCache.log.info(s"evicted $fixture substrate $k")
+      }
     }
-    m.computeIfAbsent(key, _ => build)
+    m.computeIfAbsent(key, _ => {
+      val t0 = System.nanoTime()
+      val v = build
+      SubstrateCache.log.info(f"built $fixture substrate for $dir in " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+      v
+    })
   }
 
   /** Test hook: the live key set (SubstrateCacheSpec pins eviction). */

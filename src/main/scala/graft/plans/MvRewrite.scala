@@ -74,7 +74,7 @@ object MvRewrite {
       mvPath: String,
       maxes: Seq[(String, Expression)] = Nil,
       mins: Seq[(String, Expression)] = Nil,
-      baseStamp: Long = 0L,
+      baseStamp: String = "",
       measureInputs: Map[String, Seq[String]] = Map.empty)
 
   /** Identity-erased form for cross-plan expression comparison: every
@@ -105,8 +105,8 @@ object MvRewrite {
       joinFactCol: String,
       joinDimCol: String,
       serve: MvDef,
-      factStamp: Long = 0L,
-      dimStamp: Long = 0L)
+      factStamp: String = "",
+      dimStamp: String = "")
 
   /** One dimension leg of a snowflake/multi-dim star MV: the dim's
     * base key and the FK equi-pair joining it to the fact.
@@ -115,7 +115,7 @@ object MvRewrite {
       dimKey: String,
       joinFactCol: String,
       joinDimCol: String,
-      dimStamp: Long = 0L)
+      dimStamp: String = "")
 
   /** A rollup serving aggregates over `fact ⋈ dim₁ ⋈ … ⋈ dimₙ` (TPC-H
     * Q5/Q7/Q8 group by attributes of a SECOND dim or of two dims at
@@ -129,7 +129,7 @@ object MvRewrite {
       factKey: String,
       dims: Seq[DimRef],
       serve: MvDef,
-      factStamp: Long = 0L)
+      factStamp: String = "")
 
   /** Base-path → MV registry, session-agnostic (paths are absolute). */
   private val catalog =
@@ -190,41 +190,39 @@ object MvRewrite {
     stampCache.clear()
   }
 
-  /** Freshness stamp for a base key (comma-joined root paths): the max
-    * modification time across the roots, 0 if unreachable. A served MV
-    * is only exact while its base is the one it was built from — the
-    * rule re-checks this stamp at MATCH time, so a base rewritten after
-    * registration fails the match and the query falls back to the raw
-    * scan (same mtime-generation discipline as FixtureCache). At
-    * cluster scale this is a catalog snapshot-version check; here the
-    * filesystem mtime is the version.
+  /** Freshness stamp for a base key (comma-joined root paths): the
+    * roots' [[graft.ops.FixtureCache.stamp]]s, part-file manifests read
+    * through the Hadoop FS. A served MV is only exact while its base is
+    * the generation it was built from — the rule re-checks this stamp
+    * at MATCH time, so a base rewritten after registration fails the
+    * match and the query falls back to the raw scan. At cluster scale
+    * this is a catalog snapshot-version check. An unreachable root
+    * stamps [[graft.ops.FixtureCache.Absent]] with one WARN per stat.
     */
-  def stampFor(baseKey: String): Long = {
+  def stampFor(baseKey: String): String = {
     // matchBase/matchStar run once per Aggregate in EVERY optimized
-    // query once any MV is registered — a live getFileStatus per visit
-    // is per-query planning I/O. A short-TTL cache amortizes it to at
-    // most one stat per base per second while staying well inside the
-    // 1.2 s mtime granularity the staleness spec allows; the TTL entry
-    // (not an unbounded lifetime) is what keeps rewritten-base
-    // detection sound. SparkSession.active supplies the Hadoop conf
-    // (never SparkContext.getOrCreate, which can CONSTRUCT a context).
+    // query once any MV is registered — a live stamp per visit is
+    // per-query planning I/O. A 1 s TTL cache amortizes it to at most
+    // one stamp per base per second; the TTL entry (not an unbounded
+    // lifetime) is what keeps rewritten-base detection sound.
+    // SparkSession.active supplies the Hadoop conf (never
+    // SparkContext.getOrCreate, which can CONSTRUCT a context).
     val now = System.nanoTime()
     val cached = stampCache.get(baseKey)
     if (cached != null && now - cached._1 <= StampTtlNanos) return cached._2
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val v = baseKey.split(",").map { raw =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(raw)
-        org.apache.hadoop.fs.FileSystem.get(p.toUri, conf)
-          .getFileStatus(p).getModificationTime
-      } catch { case _: Exception => 0L }
-    }.max
+    val v = baseKey.split(",").map(graft.ops.FixtureCache.stamp(conf, _))
+      .mkString(",")
     stampCache.put(baseKey, (now, v))
     v
   }
 
+  /** A registration stamped "" is never stale. */
+  private def fresh(baseKey: String, stamp: String): Boolean =
+    stamp.isEmpty || stampFor(baseKey) == stamp
+
   private val stampCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
   private val StampTtlNanos = 1000L * 1000 * 1000
 
   /** Lineage support: for a scan whose root-path key is a REGISTERED
@@ -295,7 +293,7 @@ object MvRewrite {
         Option(catalog.get(key))
           // stale registration: base rewritten since the MV was built →
           // the rollup no longer reflects the base; fail the match
-          .filter(mv => mv.baseStamp == 0L || stampFor(key) == mv.baseStamp)
+          .filter(mv => fresh(key, mv.baseStamp))
           .map(mv => (mv, Nil))
       case _ => None
     }
@@ -392,8 +390,7 @@ object MvRewrite {
 
     go(plan).map { case (cands, rawConds, ids) =>
       (cands.filter(mv =>
-        (mv.factStamp == 0L || stampFor(mv.factKey) == mv.factStamp) &&
-          (mv.dimStamp == 0L || stampFor(mv.dimKey) == mv.dimStamp)),
+        fresh(mv.factKey, mv.factStamp) && fresh(mv.dimKey, mv.dimStamp)),
         rawConds, ids)
     }.filter(_._1.nonEmpty)
   }
@@ -456,10 +453,8 @@ object MvRewrite {
           (mv.factKey +: mv.dims.map(_.dimKey)).sorted == sortedKeys &&
             pairSet == mv.dims
               .map(d => Set(d.joinFactCol, d.joinDimCol)).toSet &&
-            (mv.factStamp == 0L ||
-              stampFor(mv.factKey) == mv.factStamp) &&
-            mv.dims.forall(d =>
-              d.dimStamp == 0L || stampFor(d.dimKey) == d.dimStamp)
+            fresh(mv.factKey, mv.factStamp) &&
+            mv.dims.forall(d => fresh(d.dimKey, d.dimStamp))
         }
         if (cands.isEmpty) None else Some((cands, conds, leaves.toMap))
       }

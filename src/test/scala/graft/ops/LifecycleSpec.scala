@@ -85,8 +85,7 @@ class LifecycleSpec extends AnyFunSuite {
 
   test("tx_shard_export writes exactly one file per shard directory") {
     run("tx_shard_export").collect() // ensure the export exists
-    val root = FixtureCache.dir("shard_export", dir,
-      "shards" -> 16, "salt" -> "shard7|")
+    val root = new java.io.File(Lifecycle.shardExportPath(spark, dir))
     val shardDirs = Option(root.listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("shard="))
     assert(shardDirs.nonEmpty)

@@ -43,10 +43,9 @@ class SkewParquetProbeSpec extends AnyFunSuite {
     else if (i % 4000 == 1) 40960L + (i / 4000) * 91 // 150 rows, buckets 10+
     else HotBase + (i * 2654435761L % 37) * 110      // hot bucket, 37 values
 
-  private lazy val fixturePath: String = {
-    val f = FixtureCache.dir("skew_probe", "target/synthetic", "n" -> N)
-    val marker = new java.io.File(f, "_GRAFT_SUCCESS")
-    if (!marker.exists()) {
+  private lazy val fixturePath: String =
+    FixtureCache.layout(spark, "skew_probe", "target/synthetic", Nil,
+        "n" -> N) { f =>
       spark.range(N)
         .select(col("id"),
           expr("CASE WHEN id % 4000 = 0 THEN (id DIV 4000) * 97 " +
@@ -55,11 +54,8 @@ class SkewParquetProbeSpec extends AnyFunSuite {
           expr("CASE WHEN id % 2 = 0 THEN 'alpha' ELSE 'beta' END")
             .as("event_type"))
         .repartition(8)
-        .write.mode("overwrite").parquet(f.toString)
-      marker.createNewFile()
+        .write.mode("overwrite").parquet(f)
     }
-    f.toString
-  }
 
   private lazy val sortedRef: Array[Long] =
     (0L until N).map(value).toArray.sorted

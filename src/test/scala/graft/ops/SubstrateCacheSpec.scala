@@ -120,7 +120,7 @@ class SubstrateCacheSpec extends AnyFunSuite {
         if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
     }
     appender.start()
-    val logger = LogManager.getLogger(classOf[SubstrateCache[_]]).asInstanceOf[Logger]
+    val logger = LogManager.getLogger(FixtureCache.getClass).asInstanceOf[Logger]
     logger.addAppender(appender)
     try {
       val dir = tempFixtureDir() // no fix.parquet in it

@@ -17,8 +17,17 @@ import graft.polarify.Program
   * `spark.sql.extensions=graft.functions.GraftSparkExtensions`. A query
   * that must keep the stock plan opts out per session with Spark's
   * `spark.sql.optimizer.excludedRules` ([[graft.Sessions.stockPlans]]).
+  *
+  * Each session's MV rule is built with that session's own
+  * [[graft.plans.MvRewrite.Catalog]], so a rollup registered in one
+  * session never rewrites another's plans, and a `newSession()` child
+  * starts with an empty catalog.
   */
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  // weakly keyed: a session that is dropped takes its catalog with it
+  private val mvCatalogs = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, graft.plans.MvRewrite.Catalog]())
+
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -37,7 +46,8 @@ class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions 
         org.apache.spark.sql.graft.Md5Hash60(exprs.head)
       }))
     ext.injectOptimizerRule(_ => graft.plans.RewriteTopNPerGroup)
-    ext.injectOptimizerRule(spark => graft.plans.MvRewrite.RewriteAggToMv(spark))
+    ext.injectOptimizerRule(spark => graft.plans.MvRewrite.RewriteAggToMv(spark,
+      mvCatalogs.computeIfAbsent(spark, _ => new graft.plans.MvRewrite.Catalog)))
     ext.injectPlannerStrategy(_ => graft.plans.TopNPerGroupStrategy)
   }
 }

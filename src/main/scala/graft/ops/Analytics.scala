@@ -206,10 +206,13 @@ object Analytics {
   // -------------------------------------------------------------------
   // Pivot (wide conditional aggregation). The value list is explicit —
   // at scale an implicit pivot would first run a distinct job over the
-  // pivot column; with known domains that scan is free.
+  // pivot column; with known domains that scan is free. Planned as
+  // stock Spark, so the inner aggregate is never served from a lineitem
+  // rollup the session registered earlier: the plan shows the pivot
+  // whatever ran before it (ax_mv_rewrite pins MV serving).
   // -------------------------------------------------------------------
   private def pivotLineitem(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    t(graft.Sessions.stockPlans(spark), dir, "lineitem")
       .groupBy("l_returnflag")
       .pivot("l_linestatus", Seq("F", "O"))
       .agg(sum(col("l_quantity").cast("long")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.{cosineFloor, dotLong}
+import graft.functions.GraftFunctions.cosineFloor
 import graft.Gate
 
 /** Shared MinHash + LSH machinery for the near-dup operators.

@@ -93,10 +93,11 @@ object Lineage {
     * card citing it would record `lineitem` even though the query was
     * actually served from a materialized rollup. This variant walks
     * the OPTIMIZED plan (post-MV-rewrite) and, when a leaf scan is a
-    * registered rollup fixture, composes its edges through the
-    * MvDef/StarMvDef back to base-table columns — dims to their base
-    * table, measure columns to the template's inputs, the count column
-    * to nothing (count bytes come from no column). The result is the
+    * rollup fixture registered in this session, composes its edges
+    * through the [[graft.plans.MvRewrite.Rollup]] back to base-table
+    * columns — grain columns to their base table, measure columns to
+    * the template's inputs, the count column to nothing (count bytes
+    * come from no column). The result is the
     * provenance record staying TRUE under serving: ofServed(MV-served
     * plan) equals of(raw plan), pinned by LineageSpec.
     */

@@ -49,62 +49,54 @@ object MatViews {
         .write.mode("overwrite").parquet(path)
     }
 
-  /** The name-normalized OPTIMIZED form of a measure Column over the
-    * base table — exactly what the rule will see under `sum(...)` in a
-    * user plan (constant folding and implicit casts already applied),
-    * with attribute identity erased by name (MvRewrite.normalize).
+  /** Register a lineitem rollup at `path` with this session's MV rule:
+    * the two shared sums and the row count, plus the quantity's max and
+    * min when the rollup stores them. Each measure's template is the
+    * name-normalized OPTIMIZED form of its Column over the fact —
+    * exactly what the rule will see under `sum(...)` in a user plan
+    * (constant folding and implicit casts already applied) — and its
+    * input columns are recorded verbatim for lineage.
     */
-  private def measureRaw(
-      spark: SparkSession, base: String, c: Column): Expression = {
-    val plan = spark.read.parquet(base).select(c.as("m"))
-      .queryExecution.optimizedPlan
-    plan.collectFirst {
-      case Project(Seq(Alias(child, _)), _) => child
-    }.getOrElse(sys.error(s"measure template did not optimize to a " +
-      s"single-alias Project:\n$plan"))
+  private def registerRollup(spark: SparkSession, dir: String, path: String,
+      grain: Seq[String], dims: Seq[MvRewrite.Dim],
+      extremes: Boolean = false): Unit = {
+    val fact = s"$dir/lineitem.parquet"
+    def measure(c: Column): Expression =
+      spark.read.parquet(fact).select(c.as("m")).queryExecution.optimizedPlan
+        .collectFirst { case Project(Seq(Alias(child, _)), _) => child }
+        .getOrElse(sys.error(s"measure $c did not optimize to a single-alias Project"))
+    val qty = measure(qtyLong(col("l_quantity")))
+    val disc = measure(discCents(col("l_extendedprice"), col("l_discount")))
+    val sums = Seq("mv_sum_qty" -> qty, "mv_disc_cents" -> disc)
+    val maxes = if (extremes) Seq("mv_max_qty" -> qty) else Nil
+    val mins = if (extremes) Seq("mv_min_qty" -> qty) else Nil
+    def templates(ms: Seq[(String, Expression)]) =
+      ms.map { case (c, m) => c -> MvRewrite.normalize(m) }
+    MvRewrite.register(spark, MvRewrite.Rollup(
+      fact = MvRewrite.keyFor(spark, fact),
+      dims = dims,
+      grain = grain,
+      sums = templates(sums),
+      countCol = "mv_n_rows",
+      path = path,
+      maxes = templates(maxes),
+      mins = templates(mins),
+      measureInputs = (sums ++ maxes ++ mins).map { case (c, m) =>
+        c -> m.references.map(_.name).toSeq.distinct.sorted
+      }.toMap))
   }
 
-  private def measureTemplate(
-      spark: SparkSession, base: String, c: Column): Expression =
-    MvRewrite.normalize(measureRaw(spark, base, c))
+  /** `table` as a dim of a lineitem rollup, joined on `factCol = dimCol` */
+  private def dim(spark: SparkSession, dir: String, table: String,
+      factCol: String, dimCol: String, live: Boolean): MvRewrite.Dim =
+    MvRewrite.Dim(MvRewrite.keyFor(spark, s"$dir/$table.parquet"),
+      factCol, dimCol, live)
 
-  /** the base column names a measure reads, recorded verbatim into
-    * MvDef.measureInputs at registration (lineage reads these instead
-    * of recovering names from the canonicalized template)
-    */
-  private def measureInputs(
-      spark: SparkSession, base: String, c: Column): Seq[String] =
-    measureRaw(spark, base, c).references.map(_.name).toSeq.distinct.sorted
-
-  /** Build + register the MV for this dir and install the rule. */
-  private[ops] def serveFromMv(spark: SparkSession, dir: String): Unit = {
-    val mvPath = mvLineitemPath(spark, dir)
-    val base = s"$dir/lineitem.parquet"
-    val baseKey = MvRewrite.keyFor(spark, base)
-    MvRewrite.register(
-      baseKey,
-      MvRewrite.MvDef(
-        dims = Seq("l_returnflag", "l_linestatus"),
-        measures = Seq(
-          "mv_sum_qty" ->
-            measureTemplate(spark, base, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" ->
-            measureTemplate(spark, base,
-              discCents(col("l_extendedprice"), col("l_discount")))),
-        countCol = "mv_n_rows",
-        mvPath = mvPath,
-        maxes = Seq("mv_max_qty" ->
-          measureTemplate(spark, base, qtyLong(col("l_quantity")))),
-        mins = Seq("mv_min_qty" ->
-          measureTemplate(spark, base, qtyLong(col("l_quantity")))),
-        baseStamp = MvRewrite.stampFor(baseKey),
-        measureInputs = Map(
-          "mv_sum_qty" -> measureInputs(spark, base, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" -> measureInputs(spark, base,
-            discCents(col("l_extendedprice"), col("l_discount"))),
-          "mv_max_qty" -> measureInputs(spark, base, qtyLong(col("l_quantity"))),
-          "mv_min_qty" -> measureInputs(spark, base, qtyLong(col("l_quantity"))))))
-  }
+  /** Build + register the MV for this dir with the session's rule. */
+  private[ops] def serveFromMv(spark: SparkSession, dir: String): Unit =
+    registerRollup(spark, dir, mvLineitemPath(spark, dir),
+      grain = Seq("l_returnflag", "l_linestatus"), dims = Nil,
+      extremes = true)
 
   // -------------------------------------------------------------------
   // ax_mv_rewrite: the user asks the RAW fact table a question the MV
@@ -245,36 +237,11 @@ object MatViews {
         .write.mode("overwrite").parquet(path)
     }
 
-  private[ops] def serveStarFromMv(
-      spark: SparkSession, dir: String): Unit = {
-    val mvPath = mvStarPath(spark, dir)
-    val fact = s"$dir/lineitem.parquet"
-    val dim = s"$dir/orders.parquet"
-    val factKey = MvRewrite.keyFor(spark, fact)
-    val dimKey = MvRewrite.keyFor(spark, dim)
-    MvRewrite.registerStar(MvRewrite.StarMvDef(
-      factKey = factKey,
-      dimKey = dimKey,
-      joinFactCol = "l_orderkey",
-      joinDimCol = "o_orderkey",
-      serve = MvRewrite.MvDef(
-        dims = Seq("o_orderpriority", "l_returnflag"),
-        measures = Seq(
-          "mv_sum_qty" ->
-            measureTemplate(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" ->
-            measureTemplate(spark, fact,
-              discCents(col("l_extendedprice"), col("l_discount")))),
-        countCol = "mv_n_rows",
-        mvPath = mvPath,
-        measureInputs = Map(
-          "mv_sum_qty" ->
-            measureInputs(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" -> measureInputs(spark, fact,
-            discCents(col("l_extendedprice"), col("l_discount"))))),
-      factStamp = MvRewrite.stampFor(factKey),
-      dimStamp = MvRewrite.stampFor(dimKey)))
-  }
+  private[ops] def serveStarFromMv(spark: SparkSession, dir: String): Unit =
+    registerRollup(spark, dir, mvStarPath(spark, dir),
+      grain = Seq("o_orderpriority", "l_returnflag"),
+      dims = Seq(dim(spark, dir, "orders", "l_orderkey", "o_orderkey",
+        live = false)))
 
   private[ops] def mvStar(spark: SparkSession, dir: String): DataFrame = {
     serveStarFromMv(spark, dir)
@@ -332,36 +299,11 @@ object MatViews {
         .write.mode("overwrite").parquet(path)
     }
 
-  private[ops] def serveStarFkFromMv(
-      spark: SparkSession, dir: String): Unit = {
-    val mvPath = mvStarFkPath(spark, dir)
-    val fact = s"$dir/lineitem.parquet"
-    val dim = s"$dir/orders.parquet"
-    val factKey = MvRewrite.keyFor(spark, fact)
-    val dimKey = MvRewrite.keyFor(spark, dim)
-    MvRewrite.registerStar(MvRewrite.StarMvDef(
-      factKey = factKey,
-      dimKey = dimKey,
-      joinFactCol = "l_orderkey",
-      joinDimCol = "o_orderkey",
-      serve = MvRewrite.MvDef(
-        dims = Seq("l_orderkey"),
-        measures = Seq(
-          "mv_sum_qty" ->
-            measureTemplate(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" ->
-            measureTemplate(spark, fact,
-              discCents(col("l_extendedprice"), col("l_discount")))),
-        countCol = "mv_n_rows",
-        mvPath = mvPath,
-        measureInputs = Map(
-          "mv_sum_qty" ->
-            measureInputs(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" -> measureInputs(spark, fact,
-            discCents(col("l_extendedprice"), col("l_discount"))))),
-      factStamp = MvRewrite.stampFor(factKey),
-      dimStamp = "")) // live-dim serving: dim freshness is a non-issue
-  }
+  private[ops] def serveStarFkFromMv(spark: SparkSession, dir: String): Unit =
+    registerRollup(spark, dir, mvStarFkPath(spark, dir),
+      grain = Seq("l_orderkey"),
+      dims = Seq(dim(spark, dir, "orders", "l_orderkey", "o_orderkey",
+        live = true)))
 
   private def mvStarAttr(spark: SparkSession, dir: String): DataFrame = {
     serveStarFkFromMv(spark, dir)
@@ -419,37 +361,12 @@ object MatViews {
         .write.mode("overwrite").parquet(path)
     }
 
-  private[ops] def serveSnowFromMv(
-      spark: SparkSession, dir: String): Unit = {
-    val mvPath = mvSnowPath(spark, dir)
-    val fact = s"$dir/lineitem.parquet"
-    val factKey = MvRewrite.keyFor(spark, fact)
-    MvRewrite.registerSnow(MvRewrite.SnowMvDef(
-      factKey = factKey,
+  private[ops] def serveSnowFromMv(spark: SparkSession, dir: String): Unit =
+    registerRollup(spark, dir, mvSnowPath(spark, dir),
+      grain = Seq("l_orderkey", "l_partkey"),
       dims = Seq(
-        MvRewrite.DimRef(
-          MvRewrite.keyFor(spark, s"$dir/orders.parquet"),
-          "l_orderkey", "o_orderkey"),
-        MvRewrite.DimRef(
-          MvRewrite.keyFor(spark, s"$dir/part.parquet"),
-          "l_partkey", "p_partkey")),
-      serve = MvRewrite.MvDef(
-        dims = Seq("l_orderkey", "l_partkey"),
-        measures = Seq(
-          "mv_sum_qty" ->
-            measureTemplate(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" ->
-            measureTemplate(spark, fact,
-              discCents(col("l_extendedprice"), col("l_discount")))),
-        countCol = "mv_n_rows",
-        mvPath = mvPath,
-        measureInputs = Map(
-          "mv_sum_qty" ->
-            measureInputs(spark, fact, qtyLong(col("l_quantity"))),
-          "mv_disc_cents" -> measureInputs(spark, fact,
-            discCents(col("l_extendedprice"), col("l_discount"))))),
-      factStamp = MvRewrite.stampFor(factKey)))
-  }
+        dim(spark, dir, "orders", "l_orderkey", "o_orderkey", live = true),
+        dim(spark, dir, "part", "l_partkey", "p_partkey", live = true)))
 
   private def mvSnowflake(spark: SparkSession, dir: String): DataFrame = {
     serveSnowFromMv(spark, dir)

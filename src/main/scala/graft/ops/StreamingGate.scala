@@ -917,8 +917,6 @@ object StreamingGate {
   // -------------------------------------------------------------------
   private def unionSourcesStreamed(spark: SparkSession, dir: String): DataFrame = {
     val tag = new java.io.File(dir).getName.replace('.', '_')
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     // both parity halves staged under ONE cached dir (input/a, input/b)
     val input = stagedInputDir(spark, dir, "events.parquet",
       "stream_union") { (_, input) =>
@@ -1223,7 +1221,7 @@ object StreamingGate {
   // replays the identical distinct-hash formulation in DuckDB.
   // -------------------------------------------------------------------
   private def dedupProbeStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import MinHashLsh.{NumHashes, Bands, RowsPerBand, ThresholdPm, P, coefA, coefB}
+    import MinHashLsh.{Bands, RowsPerBand, ThresholdPm, P, coefA, coefB}
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
 

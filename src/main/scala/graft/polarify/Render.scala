@@ -55,7 +55,7 @@ object Render {
   // -------------------------------------------------------------------
 
   // CPython Lib/ast.py _Precedence levels (subset the closed world uses)
-  private val TEST = 1; private val OR = 2; private val AND = 3
+  private val OR = 2; private val AND = 3
   private val NOT = 4; private val CMP = 5; private val BOR = 6
   private val BXOR = 7; private val BAND = 8; private val ARITH = 10
   private val TERM = 11; private val FACTOR = 12; private val POWER = 13

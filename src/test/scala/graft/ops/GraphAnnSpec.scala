@@ -52,7 +52,6 @@ class GraphAnnSpec extends AnyFunSuite {
       s"curve must be monotone: ${recalls.toSeq}")
     assert(recalls(2) > recalls(0), "two rounds must strictly improve")
     // generation 1 of the curve is the same graph nnd_round refines to
-    val k = curve(0).getLong(2) * rows.head.getLong(1)
     assert(curve(1).getLong(1) == rows.map(_.getLong(3)).sum,
       "curve round-1 hits must equal nnd_round's refined hits")
   }

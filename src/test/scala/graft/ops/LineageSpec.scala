@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class LineageSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+  /** the MV-served tests' session: its rollups reach no other suite */
+  private lazy val mvSpark = SparkTestSession.spark.newSession()
   private val dir = "/root/testdata/sf0.001"
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
@@ -99,35 +101,33 @@ class LineageSpec extends AnyFunSuite {
     }
 
   test("serving from an MV does not change provenance (the invariant)") {
-    val served = SparkEntry.queries("ax_mv_star")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_star")(mvSpark, dir)
     // the plan that executes reads the rollup fixture, not the bases
     assert(leafPaths(served).exists(_.contains("mv_star")),
       "precondition: the gate query must actually be MV-served")
-    val viaMv = Lineage.ofServed(spark, served).collect()
+    val viaMv = Lineage.ofServed(mvSpark, served).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    graft.plans.MvRewrite.clear()
-    try {
-      // the raw twin of the gate query, built WITHOUT re-registering
-      // (invoking the gate would re-install the MV)
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-      val ord = spark.read.parquet(s"$dir/orders.parquet")
-      val raw = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_returnflag") === "R")
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("l_quantity").cast("long")).as("sum_qty"),
-          sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long")).as("disc_cents"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("o_orderpriority").asc)
-      assert(!leafPaths(raw).exists(_.contains("mv_star")))
-      val viaRaw = Lineage.of(spark, raw).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(viaMv == viaRaw,
-        s"served lineage must equal raw lineage:\n$viaMv\nvs\n$viaRaw")
-      assert(viaMv.forall { case (_, t, _) =>
-        t == "lineitem" || t == "orders" },
-        s"served lineage must reach base tables only: $viaMv")
-    } finally SparkEntry.queries("ax_mv_rewrite")(spark, dir)
+    // the raw twin of the gate query, in a session that registered no
+    // rollup (invoking the gate would register the MV)
+    val rawSpark = SparkTestSession.spark.newSession()
+    val li = rawSpark.read.parquet(s"$dir/lineitem.parquet")
+    val ord = rawSpark.read.parquet(s"$dir/orders.parquet")
+    val raw = li.join(ord, col("l_orderkey") === col("o_orderkey"))
+      .filter(col("l_returnflag") === "R")
+      .groupBy(col("o_orderpriority"))
+      .agg(sum(col("l_quantity").cast("long")).as("sum_qty"),
+        sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+          * 100).cast("long")).as("disc_cents"),
+        count(lit(1)).as("n_lines"))
+      .orderBy(col("o_orderpriority").asc)
+    assert(!leafPaths(raw).exists(_.contains("mv_star")))
+    val viaRaw = Lineage.of(rawSpark, raw).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(viaMv == viaRaw,
+      s"served lineage must equal raw lineage:\n$viaMv\nvs\n$viaRaw")
+    assert(viaMv.forall { case (_, t, _) =>
+      t == "lineitem" || t == "orders" },
+      s"served lineage must reach base tables only: $viaMv")
   }
 
   test("ofServed resolves a DSv2 scan leaf in the optimized plan") {
@@ -149,14 +149,14 @@ class LineageSpec extends AnyFunSuite {
 
   test("measure origins come from the carried input names, not recovery") {
     // registration records each measure's base columns verbatim in
-    // MvDef.measureInputs; mvColumnOrigins must read exactly those — a
-    // def registered WITHOUT them yields empty measure origins (there
+    // Rollup.measureInputs; mvColumnOrigins must read exactly those — a
+    // rollup registered WITHOUT them yields empty measure origins (there
     // is no hash-recovery fallback anymore)
-    SparkEntry.queries("ax_mv_star")(spark, dir).collect()
-    val mvKey = leafPaths(SparkEntry.queries("ax_mv_star")(spark, dir))
+    SparkEntry.queries("ax_mv_star")(mvSpark, dir).collect()
+    val mvKey = leafPaths(SparkEntry.queries("ax_mv_star")(mvSpark, dir))
       .find(_.contains("mv_star"))
     assert(mvKey.isDefined)
-    val origins = graft.plans.MvRewrite.mvColumnOrigins(spark, mvKey.get)
+    val origins = graft.plans.MvRewrite.mvColumnOrigins(mvSpark, mvKey.get)
     assert(origins.isDefined)
     assert(origins.get("mv_sum_qty") == Seq(("lineitem", "l_quantity")))
     assert(origins.get("mv_disc_cents") ==
@@ -167,7 +167,7 @@ class LineageSpec extends AnyFunSuite {
   test("without origin composition the executed plan cites the fixture") {
     // the negative that motivates ofServed: a naive walk of what ran
     // stops at the rollup — exactly what a dataset card must not record
-    val served = SparkEntry.queries("ax_mv_star")(spark, dir)
+    val served = SparkEntry.queries("ax_mv_star")(mvSpark, dir)
     val naiveLeaves = leafPaths(served)
     assert(naiveLeaves.exists(_.contains("mv_star")),
       "precondition: the executed plan's leaf is the fixture")

@@ -32,7 +32,7 @@ class DirMtimeZeroFs extends FilterFileSystem(new RawLocalFileSystem {
 
 /** Generation stamps on a non-local Hadoop FS: rewriting a part file
   * inside a directory fixture is a new generation for FixtureCache.stamp,
-  * SubstrateCache and MvRewrite.stampFor alike, even where the directory
+  * SubstrateCache and the MV catalog's stampFor alike, even where the directory
   * reports no mtime of its own.
   */
 class ObjectStoreStampSpec extends AnyFunSuite {
@@ -55,7 +55,8 @@ class ObjectStoreStampSpec extends AnyFunSuite {
 
       val cache = new SubstrateCache[String]("fix.parquet", _ => ())
       val stamp1 = FixtureCache.stamp(conf, fixturePath.toString)
-      val mv1 = MvRewrite.stampFor(fixturePath.toString)
+      val mvCatalog = MvRewrite.catalog(spark)
+      val mv1 = mvCatalog.stampFor(fixturePath.toString)
       assert(cache.get(spark, dir)("gen1") === "gen1")
       assert(stamp1 !== FixtureCache.Absent)
 
@@ -68,8 +69,8 @@ class ObjectStoreStampSpec extends AnyFunSuite {
       assert(cache.get(spark, dir)("gen2") === "gen2",
         "the substrate of the replaced part file must be rebuilt")
       assert(cache.liveKeys.size === 1, "the stale generation must be evicted")
-      Thread.sleep(1100) // past MvRewrite.stampFor's 1 s TTL
-      assert(MvRewrite.stampFor(fixturePath.toString) !== mv1)
+      Thread.sleep(1100) // past stampFor's 1 s TTL
+      assert(mvCatalog.stampFor(fixturePath.toString) !== mv1)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
   }
 }

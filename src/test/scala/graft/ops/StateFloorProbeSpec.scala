@@ -20,7 +20,6 @@ class StateFloorProbeSpec extends AnyFunSuite {
     val prev = spark.conf.get(key)
     spark.conf.set(key, parts.toString)
     try {
-      import org.apache.spark.sql.functions._
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
       val src = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.ops.StreamingGate
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MemoryStream spec for the streaming ANN-index ingest core

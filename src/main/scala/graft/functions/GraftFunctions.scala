@@ -24,7 +24,9 @@ import graft.polarify.Program
   * starts with an empty catalog.
   */
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  // weakly keyed: a session that is dropped takes its catalog with it
+  // Spark re-runs the rule builders on every optimizer pass, so the
+  // catalog lives here, one per session; weakly keyed, so a session
+  // that is dropped takes its catalog with it
   private val mvCatalogs = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, graft.plans.MvRewrite.Catalog]())
 

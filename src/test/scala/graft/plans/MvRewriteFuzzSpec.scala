@@ -40,12 +40,14 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
   private def collectSorted(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
-  private def snowJoined(s: SparkSession): DataFrame =
+  private def starJoined(s: SparkSession): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
       .join(s.read.parquet(s"$dir/orders.parquet"),
         col("l_orderkey") === col("o_orderkey"))
-      .join(s.read.parquet(s"$dir/part.parquet"),
-        col("l_partkey") === col("p_partkey"))
+
+  private def snowJoined(s: SparkSession): DataFrame =
+    starJoined(s).join(s.read.parquet(s"$dir/part.parquet"),
+      col("l_partkey") === col("p_partkey"))
 
   test("every legal grain x measure combination rewrites and is exact") {
     install()
@@ -74,9 +76,6 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
   test("every legal STAR grain x measure combination rewrites and is exact") {
     SparkEntry.queries("ax_mv_star")(spark, dir).collect() // register star
     val rnd = new scala.util.Random(43)
-    def joined(s: SparkSession) = s.read.parquet(s"$dir/lineitem.parquet")
-      .join(s.read.parquet(s"$dir/orders.parquet"),
-        col("l_orderkey") === col("o_orderkey"))
     val grains = Seq(Seq("o_orderpriority"), Seq("l_returnflag"),
       Seq("o_orderpriority", "l_returnflag"))
     val measurePool = Seq("q" -> qty, "d" -> dc, "n" -> cnt)
@@ -85,13 +84,13 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
       val aggs = ms.map { case (tag, m) =>
         m().as(s"s_${tag}_${rnd.nextInt(100)}")
       }
-      val df = joined(spark).groupBy(grain.map(col): _*)
+      val df = starJoined(spark).groupBy(grain.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
       val p = planOf(df)
       assert(p.contains("mv_star") && !p.contains("lineitem.parquet"),
         s"no star rewrite for grain=$grain measures=${ms.map(_._1)}:\n$p")
       val served = collectSorted(df)
-      val again = joined(rawSpark).groupBy(grain.map(col): _*)
+      val again = starJoined(rawSpark).groupBy(grain.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
       assert(!planOf(again).contains("mv_star"))
       assert(served == collectSorted(again),
@@ -102,9 +101,6 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
   test("every JOIN-BACK dim-attribute grain rewrites and is exact") {
     SparkEntry.queries("ax_mv_star_attr")(spark, dir).collect() // FK MV
     val rnd = new scala.util.Random(47)
-    def joined(s: SparkSession) = s.read.parquet(s"$dir/lineitem.parquet")
-      .join(s.read.parquet(s"$dir/orders.parquet"),
-        col("l_orderkey") === col("o_orderkey"))
     // attributes no attribute-grain rollup anticipates, alone and mixed
     val grains = Seq(Seq("o_orderstatus"), Seq("o_custkey"),
       Seq("o_orderdate"), Seq("o_orderstatus", "o_custkey"))
@@ -114,13 +110,13 @@ class MvRewriteFuzzSpec extends AnyFunSuite {
       val aggs = ms.map { case (tag, m) =>
         m().as(s"j_${tag}_${rnd.nextInt(100)}")
       }
-      val df = joined(spark).groupBy(grain.map(col): _*)
+      val df = starJoined(spark).groupBy(grain.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
       val p = planOf(df)
       assert(p.contains("mv_star_fk") && !p.contains("lineitem.parquet"),
         s"no join-back for grain=$grain measures=${ms.map(_._1)}:\n$p")
       val served = collectSorted(df)
-      val again = joined(rawSpark).groupBy(grain.map(col): _*)
+      val again = starJoined(rawSpark).groupBy(grain.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
       assert(!planOf(again).contains("mv_star_fk"))
       assert(served == collectSorted(again),
